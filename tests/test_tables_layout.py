@@ -1,12 +1,12 @@
 """Layout hardening for sources.tables (r15 verdict #2 / ADVICE):
 
-- ``_scan_units`` must never mark a Hive-partitioned (``date=…/``) or
-  empty/unknown layout degenerate — ``spread_scan`` would otherwise
+- the table layout must never count a Hive-partitioned (``date=…/``) or
+  empty/unknown layout — ``load_table(spread=True)`` would otherwise
   inject a full-table round-robin Exchange on a massively splittable
   production table.
-- footer reads are memoized per (path, mtime signature) and invalidate
-  when a part file is rewritten in place (directory mtime alone misses
-  that).
+- the layout record is memoized per (path, mtime signature), opens each
+  footer once, and invalidates when a part file is rewritten in place
+  (directory mtime alone misses that).
 - ``register_views`` re-registers for a sibling SparkSession that
   shares the applicationId but has an empty temp-view catalog.
 """
@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import time
+from dataclasses import replace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -22,10 +23,10 @@ import pytest
 
 from weather_monitoring_spark.sources import tables
 from weather_monitoring_spark.sources.tables import (
-    _SPREAD_FILE_CAP,
+    _layout,
     _mtime_sig,
-    _scan_units,
-    spread_scan,
+    load_table,
+    table_rows,
 )
 
 
@@ -39,33 +40,35 @@ def test_scan_units_partitioned_layout_assumed_splittable(tmp_path):
         d = root / day
         d.mkdir(parents=True)
         _write_parquet(str(d / "part-0.parquet"))
-    assert _scan_units(str(root)) == _SPREAD_FILE_CAP
+    assert _layout(str(root)).row_groups is None
 
 
 def test_scan_units_empty_dir_assumed_splittable(tmp_path):
     d = tmp_path / "empty.parquet"
     d.mkdir()
-    assert _scan_units(str(d)) == _SPREAD_FILE_CAP
+    assert _layout(str(d)).row_groups is None
 
 
 def test_scan_units_missing_path_assumed_splittable(tmp_path):
-    assert _scan_units(str(tmp_path / "nope.parquet")) == _SPREAD_FILE_CAP
+    assert _layout(str(tmp_path / "nope.parquet")).row_groups is None
 
 
 def test_scan_units_counts_row_groups_and_memoizes(tmp_path):
     f = tmp_path / "one.parquet"
     _write_parquet(str(f))
-    assert _scan_units(str(f)) == 1
+    assert _layout(str(f)).row_groups == 1
     key = (str(f), _mtime_sig(str(f)))
-    assert tables._SCAN_UNITS_MEMO[key] == 1
-    # Memo hit: poison the cached value and confirm it is served.
-    tables._SCAN_UNITS_MEMO[key] = 7
-    assert _scan_units(str(f)) == 7
+    assert tables._LAYOUTS[key].row_groups == 1
+    # Memo hit: poison the cached record and confirm it is served.
+    tables._LAYOUTS[key] = replace(tables._LAYOUTS[key], row_groups=7, rows=70)
+    assert _layout(str(f)).row_groups == 7
+    assert table_rows(str(tmp_path), "one") == 70
     # Rewrite in place with a newer mtime -> invalidated, recounted.
     time.sleep(0.01)
     _write_parquet(str(f))
     os.utime(str(f))
-    assert _scan_units(str(f)) == 1
+    assert _layout(str(f)).row_groups == 1
+    assert table_rows(str(tmp_path), "one") == 10
 
 
 def test_mtime_sig_tracks_inplace_part_rewrite(tmp_path):
@@ -88,10 +91,27 @@ def test_spread_scan_skips_partitioned_layout(spark, tmp_path):
         d = root / day
         d.mkdir(parents=True)
         _write_parquet(str(d / "part-0.parquet"))
-    df = spark.read.parquet(str(root))
-    out = spread_scan(spark, df, str(root))
-    # No exchange injected: the plan object is returned unchanged.
-    assert out is df
+    df = load_table(spark, str(tmp_path), "partitioned", spread=True)
+    # No exchange injected: the plan holds no round-robin Repartition.
+    assert "Repartition" not in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_footer_opens_once_for_spread_and_table_rows(spark, tmp_path, monkeypatch):
+    """load_table(spread=True) followed by table_rows on one single-file
+    table reads its footer once: both answers come from one layout."""
+    _write_parquet(str(tmp_path / "t.parquet"))
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(*args, **kwargs):
+        opened.append(args[0])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    df = load_table(spark, str(tmp_path), "t", spread=True)
+    assert "Repartition" in df._jdf.queryExecution().optimizedPlan().toString()
+    assert table_rows(str(tmp_path), "t") == 10
+    assert opened == [str(tmp_path / "t.parquet")]
 
 
 def test_register_views_covers_sibling_session(spark):
@@ -122,18 +142,12 @@ def test_table_rows_footer_count_matches_engine(spark):
     import shutil
     import tempfile
 
-    from weather_monitoring_spark.sources.tables import (
-        _FOOTER_ROWS_MEMO,
-        load_table,
-        table_rows,
-    )
-
     sf = "/root/testdata/sf0.001"
     n = table_rows(sf, "region")
     assert n == load_table(spark, sf, "region").count()
     # memo hit: same object back without re-reading footers
     assert table_rows(sf, "region") == n
-    assert any(k[0].endswith("region.parquet") for k in _FOOTER_ROWS_MEMO)
+    assert any(k[0].endswith("region.parquet") for k in tables._LAYOUTS)
 
     # partitioned layout -> None (fall back to a distributed count)
     work = tempfile.mkdtemp(prefix="trows_")

@@ -444,7 +444,8 @@ def q34_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text payload — shuffling heavy bytes to parallelize cheap work is a
     # net loss (guide §2.3; alternating-order A/B read 1.31x, 1/8 passes
     # won — scripts/probe_r16_spread_ab.json). Contrast q26/q27, whose
-    # per-row regex/annotation work is heavy enough that spread wins 2x.
+    # per-row regex/annotation work is heavy enough that spread wins
+    # (on/off ratio q26 0.61, 1.64x; q27 0.49, 2.04x — same probe).
     return simhash_neardup_pairs(load_table(spark, sf_dir, "documents"))
 
 

@@ -53,11 +53,8 @@ def get_spark(
         # a 64 KB floor keeps tasks well above scheduling overhead
         # (~5 ms) while restoring parallelism for small intermediates; at
         # production shuffle sizes partitions sit far above either floor
-        # and this setting is inert. Env-tunable for cluster profiles.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
+        # and this setting is inert.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

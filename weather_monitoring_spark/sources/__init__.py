@@ -12,13 +12,12 @@ from weather_monitoring_spark.sources.kafka import (
     read_kafka_stream,
     write_kafka_stream,
 )
-from weather_monitoring_spark.sources.tables import TABLES, load_table, load_tables, register_views
+from weather_monitoring_spark.sources.tables import TABLES, load_table, register_views
 
 __all__ = [
     "TABLES",
     "kafka_available",
     "load_table",
-    "load_tables",
     "read_binary_assets",
     "read_csv",
     "read_csv_documents",

@@ -10,9 +10,11 @@ DataFrame.
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Tables the driver materializes at /root/testdata/sf*/ (TESTDATA.md).
 TABLES = (
@@ -28,134 +30,100 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-#: File count above which a scan is assumed splittable enough without
-#: reading footers (each file is at least one independent map unit).
-_SPREAD_FILE_CAP = 256
+#: Above this many files, footer counting is left to the engine (a
+#: distributed count) instead of a driver-side footer loop.
+_FOOTER_FILE_CAP = 4096
 
 
-#: (path, mtime signature) -> row-group count. Footer reads are driver-
-#: side metadata-only but not free; un-memoized they ran on EVERY
-#: load_table call — twice per call when both spread and pin are set
-#: (q50) — r15 ADVICE. The mtime signature invalidates on replacement.
-_SCAN_UNITS_MEMO: dict[tuple[str, float], int] = {}
+@dataclass(frozen=True)
+class TableLayout:
+    """What the loader knows about one parquet table without a Spark job.
+
+    ``row_groups`` and ``rows`` are summed from one footer open per file.
+    They are None when the layout defeats cheap counting — a
+    Hive-partitioned tree (``date=…/`` subdirectories), an empty or
+    unreadable listing, more than _FOOTER_FILE_CAP files, an unreadable
+    footer — which means "assume splittable, let the engine count": a
+    production partitioned table is massively splittable, so the loader
+    must never mark it degenerate (r15 verdict #2 / ADVICE).
+
+    ``schema`` is the raw read schema (pre ts-conversion /
+    NTZ-normalize) of the first Spark read, so later reads of the same
+    files skip the schema-inference job (~2 s per bench pass unmemoized,
+    r15 profile)."""
+
+    files: tuple[str, ...]
+    row_groups: int | None
+    rows: int | None
+    schema: StructType | None = None
 
 
-def _scan_units(path: str) -> int:
-    """Effective map-side parallelism cap of a parquet scan: Spark splits
-    parquet by ROW GROUP, so a table of few files with one row group each
-    runs its whole scan stage (and everything fused into it — filters,
-    projections, explodes, partial aggregates, Python evaluation) on that
-    many cores regardless of split math. Counts files, and only reads
-    footers (driver-side, metadata-only) when the file count alone cannot
-    prove the scan splittable — bounded work at any scale.
+_UNCOUNTED = TableLayout(files=(), row_groups=None, rows=None)
 
-    Any layout this function cannot positively prove degenerate — a
-    Hive-partitioned directory tree (``date=…/`` subdirectories), an
-    empty or unreadable listing — reports _SPREAD_FILE_CAP ("assume
-    splittable"), so spread_scan never injects a full-table exchange on
-    a production partitioned table (r15 verdict #2 / ADVICE)."""
+#: (path, mtime signature) -> TableLayout. Metadata only, never rows;
+#: the signature drops the entry when a file is replaced.
+_LAYOUTS: dict[tuple[str, float], TableLayout] = {}
+
+
+def _layout(path: str, schema: StructType | None = None) -> TableLayout:
+    """The memoized layout of ``path``, recording ``schema`` on it when
+    the memoized record has none yet."""
     try:
-        sig = _mtime_sig(path)
+        key = (path, _mtime_sig(path))
     except OSError:
-        return _SPREAD_FILE_CAP
-    memo_key = (path, sig)
-    hit = _SCAN_UNITS_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
+        return _UNCOUNTED
+    layout = _LAYOUTS.get(key)
+    if layout is None:
+        layout = _LAYOUTS[key] = _read_layout(path)
+    if schema is not None and layout.schema is None:
+        layout = _LAYOUTS[key] = replace(layout, schema=schema)
+    return layout
+
+
+def _read_layout(path: str) -> TableLayout:
     if os.path.isfile(path):
         files = [path]
     else:
         try:
             entries = [os.path.join(path, f) for f in os.listdir(path)]
         except OSError:
-            return _SPREAD_FILE_CAP
+            return _UNCOUNTED
         if any(os.path.isdir(e) for e in entries):
-            # Partitioned/nested layout: file count unknowable from one
-            # level; a real partitioned table is massively splittable,
-            # so never mark it degenerate.
-            _SCAN_UNITS_MEMO[memo_key] = _SPREAD_FILE_CAP
-            return _SPREAD_FILE_CAP
+            return _UNCOUNTED
         files = [e for e in entries if e.endswith(".parquet")]
-        if not files:
-            # Empty/unrecognized listing: unknown, assume splittable.
-            _SCAN_UNITS_MEMO[memo_key] = _SPREAD_FILE_CAP
-            return _SPREAD_FILE_CAP
-    if len(files) >= _SPREAD_FILE_CAP:
-        units = len(files)
-    else:
-        try:
-            import pyarrow.parquet as pq
+    if not files or len(files) > _FOOTER_FILE_CAP:
+        return replace(_UNCOUNTED, files=tuple(files))
+    try:
+        import pyarrow.parquet as pq
 
-            units = (
-                sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
-                or 1
-            )
-        except Exception:
-            units = max(len(files), 1)
-    _SCAN_UNITS_MEMO[memo_key] = units
-    return units
-
-
-#: (path, mtime signature) -> total row count from parquet footers.
-#: Metadata only (the same class as _SCAN_UNITS_MEMO): never rows.
-_FOOTER_ROWS_MEMO: dict[tuple[str, float], int | None] = {}
-
-#: Above this many files, footer row-counting is left to the engine
-#: (a distributed count) instead of a driver-side footer loop.
-_FOOTER_ROWS_FILE_CAP = 4096
+        footers = [pq.ParquetFile(f).metadata for f in files]
+    except Exception:
+        return replace(_UNCOUNTED, files=tuple(files))
+    return TableLayout(
+        files=tuple(files),
+        row_groups=sum(m.num_row_groups for m in footers),
+        rows=sum(m.num_rows for m in footers),
+    )
 
 
 def table_rows(sf_dir: str, name: str) -> int | None:
     """Row count of one testdata table from parquet FOOTERS only —
-    driver-side metadata, no Spark job, memoized per (path, mtime
-    signature). Returns None when the layout defeats cheap counting
-    (partitioned tree, too many files, unreadable footer) — callers
-    fall back to a distributed count. Exists for operators that need a
+    driver-side metadata, no Spark job. Returns None when the layout
+    defeats cheap counting (see TableLayout) — callers fall back to a
+    distributed count. Exists for operators that need a
     corpus-size-derived SHAPE parameter (e.g. the blocked-GEMM block
     count, where any count yields the identical pair set): an eager
     df.count() per plan build was one whole Spark job per bench pass."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        sig = _mtime_sig(path)
-    except OSError:
-        return None
-    key = (path, sig)
-    if key in _FOOTER_ROWS_MEMO:
-        return _FOOTER_ROWS_MEMO[key]
-    if os.path.isfile(path):
-        files = [path]
-    else:
-        try:
-            entries = [os.path.join(path, f) for f in os.listdir(path)]
-        except OSError:
-            return None
-        if any(os.path.isdir(e) for e in entries):
-            _FOOTER_ROWS_MEMO[key] = None
-            return None
-        files = [e for e in entries if e.endswith(".parquet")]
-        if not files or len(files) > _FOOTER_ROWS_FILE_CAP:
-            _FOOTER_ROWS_MEMO[key] = None
-            return None
-    try:
-        import pyarrow.parquet as pq
-
-        rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
-        rows = None
-    _FOOTER_ROWS_MEMO[key] = rows
-    return rows
+    return _layout(os.path.join(sf_dir, f"{name}.parquet")).rows
 
 
 def _mtime_sig(path: str) -> float:
-    """Invalidation signature for memo entries keyed on ``path``. For a
-    plain file this is its mtime. For a directory-style table the
+    """Invalidation signature for layout entries keyed on ``path``. For
+    a plain file this is its mtime. For a directory-style table the
     directory mtime alone misses an in-place part-file overwrite (r15
     ADVICE), so fold in the max mtime of the direct children (one level
     — matches the flat layouts load_table reads; deeper trees are
-    handled by _scan_units' assume-splittable branch before any memo
-    consumer can go stale)."""
+    uncounted layouts, which hold no footer figures to go stale)."""
     mt = os.path.getmtime(path)
     if os.path.isdir(path):
         try:
@@ -164,30 +132,6 @@ def _mtime_sig(path: str) -> float:
         except OSError:
             pass
     return mt
-
-
-def spread_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """Round-robin repartition a parquet-backed frame when (and only when)
-    its file layout cannot feed the available cores — the guide's fix for
-    the 'one huge unsplittable file' input-skew class (§2.5): the scan
-    task then only reads + shuffle-writes, and the heavy per-row work
-    downstream (expand/aggregate/explode/shingle/Arrow UDF) runs on every
-    core instead of one per row group.
-
-    Scale-adaptive by construction: a production table ships hundreds of
-    files / row groups, so the condition is false and NO exchange is
-    added — this is a guard against degenerate layouts, not a local[32]
-    tuning constant. Column pruning pushes through the repartition, so
-    the exchange carries only the columns the query reads. Safe for every
-    registry query: results are order-insensitive by the determinism
-    rules (exact decimal sums, unique tiebreakers, sorted arrays).
-    Disable with SPARK_GRAFT_SPREAD=0."""
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df
-    n = spark.sparkContext.defaultParallelism
-    if _scan_units(path) < n:
-        return df.repartition(n)
-    return df
 
 
 def load_table(
@@ -205,6 +149,30 @@ def load_table(
     proper TimestampType with exact integer division — the driver's data is
     microsecond-aligned, so ``ns div 1000`` is lossless and matches what
     DuckDB presents for the same file.
+
+    Spark splits parquet by ROW GROUP, so a table with fewer row groups
+    than cores runs its whole scan stage (and everything fused into it —
+    filters, projections, explodes, partial aggregates, Python
+    evaluation) on that many cores. Only on such a degenerate layout do
+    the two options act:
+
+    - ``spread`` round-robin repartitions the scan across the cores (the
+      guide's fix for the 'one huge unsplittable file' input-skew class,
+      §2.5): the scan task then only reads + shuffle-writes, and the
+      heavy per-row work downstream runs on every core. Column pruning
+      pushes through the repartition, so the exchange carries only the
+      columns the query reads.
+    - ``pin`` projects to these columns and localCheckpoints the
+      projected scan, so a query that references the table from several
+      branches decodes it ONCE instead of once per branch. The column
+      list is explicit (not '*') so the pinned blocks carry only what the
+      query reads; the projection applies on every layout.
+
+    A production table ships hundreds of files / row groups, so neither
+    adds an exchange or a checkpoint there: both guard a degenerate
+    layout rather than tune for local mode. Safe for every registry
+    query: results are order-insensitive by the determinism rules (exact
+    decimal sums, unique tiebreakers, sorted arrays).
     """
     # Defensive: the caller's session may not come from session.get_spark
     # (the driver harness builds its own). Timestamp-derived results
@@ -212,7 +180,10 @@ def load_table(
     # TZ-naive DuckDB oracle, so pin it at the loader boundary too.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = _cached_schema(spark, path, name)
+    layout = _layout(path)
+    reader = spark.read
+    if layout.schema is not None:
+        reader = reader.schema(layout.schema)
     if name == "events":
         # Scope the legacy conf to this one read: it is consumed when the
         # relation is planned (verified: collects after restore still
@@ -222,9 +193,6 @@ def load_table(
         prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         try:
-            reader = spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
             df = reader.parquet(path)
         finally:
             if prior is None:
@@ -232,37 +200,19 @@ def load_table(
             else:
                 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
     else:
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
         df = reader.parquet(path)
-    # Capture the RAW read schema (pre ts-conversion / NTZ-normalize) so
-    # the next load of the same file skips the inference job.
-    _remember_schema(spark, path, df)
+    if layout.schema is None:
+        layout = _layout(path, df.schema)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     df = _normalize_ntz(df)
-    # SPARK_GRAFT_SPREAD_FORCE=1 is the measurement knob: spread EVERY
-    # load, so the per-query win/loss of the exchange can be measured
-    # without editing call sites (scripts/probe_r15_spread.py).
-    if spread or os.environ.get("SPARK_GRAFT_SPREAD_FORCE") == "1":
-        df = spread_scan(spark, df, path)
+    n = spark.sparkContext.defaultParallelism
+    degenerate = layout.row_groups is not None and layout.row_groups < n
+    if spread and degenerate:
+        df = df.repartition(n)
     if pin is not None:
-        # ``pin``: project to these columns and, when the file layout is
-        # degenerate (fewer row groups than cores — the same condition
-        # that gates spread_scan), localCheckpoint the projected scan so
-        # a query that references the table from several branches decodes
-        # it ONCE instead of once per branch. On a production layout the
-        # scan is parallel and each branch's re-scan prunes its own
-        # columns, so no pin is added — this, like spread_scan, guards a
-        # degenerate layout rather than tuning for local mode. Explicit
-        # column list (not '*') so the pinned blocks carry only what the
-        # query reads; disable with SPARK_GRAFT_PIN=0.
         df = df.select(*pin)
-        if (
-            os.environ.get("SPARK_GRAFT_PIN", "1") != "0"
-            and _scan_units(path) < spark.sparkContext.defaultParallelism
-        ):
+        if degenerate:
             df = df.localCheckpoint(eager=False)
     return df
 
@@ -300,41 +250,6 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
             f"(got {tz!r}); load tables via load_table, which pins it"
         )
     return df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-#: Inferred read schema per ((applicationId, path, mtime)) — METADATA
-#: memo only (column names/types from the parquet footer), never data.
-#: Schema inference is one driver-side job per read; with ~60 load_table
-#: calls per bench pass those footer jobs alone cost ~2 s (r15 profile).
-#: The mtime key drops the entry if the file is replaced; keyed per
-#: application so a new session (possibly different legacy-nanos conf)
-#: re-infers.
-_SCHEMA_MEMO: dict[tuple[str, str, float], object] = {}
-
-
-def _cached_schema(spark: SparkSession, path: str, name: str):
-    """Schema for ``path`` from the first inference in this application.
-
-    Returns None on the first call (letting the reader infer and the
-    memo capture it from the resulting frame via _remember_schema) or
-    when the file's mtime changed."""
-    try:
-        key = (spark.sparkContext.applicationId, path, _mtime_sig(path))
-    except OSError:
-        return None
-    return _SCHEMA_MEMO.get(key)
-
-
-def _remember_schema(spark: SparkSession, path: str, df: DataFrame) -> None:
-    try:
-        key = (spark.sparkContext.applicationId, path, _mtime_sig(path))
-    except OSError:
-        return
-    _SCHEMA_MEMO.setdefault(key, df.schema)
 
 
 #: (applicationId, sf_dir) of the last register_views call, so repeated

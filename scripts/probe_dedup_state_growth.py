@@ -1,8 +1,7 @@
 """Growth probe for the STATE-STORE streaming dedup engine — the
-flat-cost claim, measured (companion to probe_dedup_store_growth.py,
-which measures the parquet-store engine's scan-growth trade).
+flat-cost claim, measured.
 
-Same workload shape: N_BATCHES micro-batches (one source file each,
+Workload: N_BATCHES micro-batches (one source file each,
 maxFilesPerTrigger=1) of BATCH_DOCS docs with 10% exact re-arrivals and
 5% near-dup rewrites of earlier documents. Per-batch wall times come
 from Spark's OWN StreamingQueryProgress (triggerExecution ms), polled

@@ -7,7 +7,7 @@ lineitem/events/documents with id offsets and per-replica text
 mutation (distinct docs, so the dedup queries keep a realistic
 candidate profile instead of mass 10-way duplication) — written as 32
 files per table so the scan parallelizes from the layout, not from
-spread_scan. Heavy queries then run at $LOW and $HIGH cores in
+``load_table``'s spread. Heavy queries then run at $LOW and $HIGH cores in
 separate subprocesses (fresh JVM each) with a warm pass first; the
 par32 host anchor brackets each leg so hypervisor throttle (which hits
 the 32-core leg hardest and so UNDERSTATES the ratio) is attributable.

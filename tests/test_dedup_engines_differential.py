@@ -1,35 +1,28 @@
-"""Differential property pinning the ONE documented semantic divergence
-between the two streaming dedup engines (VERDICT r13 #3).
+"""Differential property: the state-store dedup engine
+(``doc_dedup_state.StateStoreDocDedup``) keeps exactly the survivor set
+of an exact pure-Python model of its law, doc for doc.
 
-The engines agree on exact dedup and on within-batch keeper law (min-id
-per fingerprint, min-id per band bucket). They diverge on CROSS-BATCH
-band-bucket occupancy:
+The model (``_simulate_state_engine``), given each doc's REAL band set:
 
-- parquet engine (``doc_dedup.StreamingDocDedup``): the persisted band
-  index holds SURVIVOR bands only — a doc dropped by the fuzzy stage
-  leaves no trace, so a later doc near ONLY the dropped doc survives.
-- state engine (``doc_dedup_state.StateStoreDocDedup``): bucket claims
-  are FIRST-PRESENTER — a doc that is itself dropped still claimed its
-  fresh buckets, so a later near-dup of a dropped doc is dropped too
-  (chain/transitive dropping).
+- Q1, within a batch: min-id keeper per fingerprint (NULL text is a
+  per-doc sentinel), then min-id keeper per band bucket;
+- Q2, exact vs history: a fingerprint presented in an earlier batch
+  drops the doc;
+- Q3, fuzzy vs history: band-bucket claims are FIRST-PRESENTER — a doc
+  survives iff none of its buckets was claimed before, and a doc that
+  is itself dropped still claims its fresh buckets, so a later near-dup
+  of ONLY a dropped doc is dropped too (chain dropping);
+- NULL-text and shingle-less docs bypass Q3.
 
-Since survivors always presented their buckets, survivor-anchored
-occupancy ⊆ first-presenter occupancy, which gives the one-directional
-law this property pins:
+Unbounded history (``horizon_s=None``) is the engine default; the
+bounded mode adds the TTL law the horizon test pins.
 
-    state_survivors ⊆ parquet_survivors
-
-and EVERY disagreement doc X (parquet keeps, state drops) must be a
-chain case: X shares a band bucket with some EARLIER-presented doc that
-the state engine dropped, and with NO earlier state survivor (if it
-shared one with a survivor S, S's bands are in BOTH indexes — S ∈
-state_survivors ⊆ parquet_survivors — and both engines would drop X).
-
-The corpus is adversarial by construction: chain triples A≈B≈C with
-bands(A)∩bands(C) = ∅ SELECTED using the engines' own band derivation
-(so the divergence is guaranteed to manifest, not hoped for), plus
-exact dup pairs, exact re-arrivals of both survivors and dropped docs,
-and the null/short bypass classes (which must never disagree).
+The corpora are adversarial by construction: chain triples A≈B≈C with
+bands(A)∩bands(C) = ∅ SELECTED using the engine's own band derivation
+(so chain dropping is guaranteed to fire, not hoped for), exact dup
+pairs, exact re-arrivals of both survivors and dropped docs, the
+null/short bypass classes, and seeded random mutation forests — one of
+them straddling a 1-hour horizon.
 """
 
 from __future__ import annotations
@@ -40,7 +33,6 @@ import random
 
 from pyspark.sql import functions as F
 
-from weather_monitoring_spark.streaming.doc_dedup import StreamingDocDedup
 from weather_monitoring_spark.streaming.doc_dedup_state import (
     StateStoreDocDedup,
     _band_rows,
@@ -104,15 +96,6 @@ def _pick_chain_triples(spark, want: int = 2):
     return picked
 
 
-def _run_parquet_engine(spark, store_dir: str, batches):
-    dd = StreamingDocDedup(spark, store_dir)
-    for i, rows in enumerate(batches):
-        dd.process_batch(
-            spark.createDataFrame(rows, "doc_id long, text string"), i
-        )
-    return {r.doc_id for r in dd.corpus().select("doc_id").collect()}
-
-
 def _run_state_engine(
     spark, out_dir: str, ckpt: str, src: str, batches, horizon=None
 ):
@@ -162,7 +145,14 @@ def _run_state_engine(
     return {r.doc_id for r in dd.corpus().select("doc_id").collect()}
 
 
+def _unbounded(batches):
+    """The simulation's row shape: unbounded mode ignores event time."""
+    return [[(d, t, 0.0) for d, t in rows] for rows in batches]
+
+
 def test_engine_divergence_is_exactly_the_chain_class(spark, tmp_path):
+    """Chain triples against the exact model: the tails, near ONLY the
+    dropped middles, are dropped (first-presenter claims)."""
     (a1, b1, c1), (a2, b2, c2) = _pick_chain_triples(spark)
     unique = "an entirely novel standalone document " + " ".join(
         f"u{k}" for k in range(40)
@@ -172,14 +162,13 @@ def test_engine_divergence_is_exactly_the_chain_class(spark, tmp_path):
         # batch 0: chain heads + exact-dup pair (10,11) + null + short
         [(1, a1), (2, a2), (10, unique), (11, unique), (20, None),
          (21, "one two")],
-        # batch 1: chain middles (near the heads -> dropped by BOTH) +
-        # exact re-arrival of a SURVIVOR's text
+        # batch 1: chain middles (near the heads -> dropped) + exact
+        # re-arrival of a SURVIVOR's text
         [(31, b1), (32, b2), (40, unique)],
-        # batch 2: chain tails (near ONLY the dropped middles -> the
-        # divergence) + exact re-arrival of a DROPPED doc's text
+        # batch 2: chain tails (near ONLY the dropped middles) + exact
+        # re-arrival of a DROPPED doc's text
         [(51, c1), (52, c2), (60, b1)],
     ]
-    pq = _run_parquet_engine(spark, str(tmp_path / "pq"), batches)
     st = _run_state_engine(
         spark,
         str(tmp_path / "st"),
@@ -188,69 +177,37 @@ def test_engine_divergence_is_exactly_the_chain_class(spark, tmp_path):
         batches,
     )
 
-    # agreed classes first: heads + exact-dup min-id + bypass docs
-    for eng in (pq, st):
-        assert {1, 2, 10, 20, 21} <= eng
-        assert 11 not in eng          # exact dup, same batch
-        assert 31 not in eng and 32 not in eng  # near the heads
-        assert 40 not in eng          # exact re-arrival of a survivor
-        assert 60 not in eng          # exact re-arrival of a dropped doc
+    assert {1, 2, 10, 20, 21} <= st  # heads, exact-dup min-id, bypass
+    assert 11 not in st           # exact dup, same batch
+    assert 31 not in st and 32 not in st  # near the heads
+    assert 40 not in st           # exact re-arrival of a survivor
+    assert 60 not in st           # exact re-arrival of a dropped doc
+    # the first-presenter law: the dropped middles still claimed their
+    # fresh buckets, so the tails lose them
+    assert 51 not in st and 52 not in st
 
-    # the one-directional law
-    assert st <= pq, f"state engine kept docs the parquet engine dropped: {st - pq}"
-
-    # the constructed chain tails ARE the divergence
-    disagreements = pq - st
-    assert disagreements == {51, 52}, disagreements
-
-    # classify every disagreement against the actual band geometry
     texts = {
         doc_id: text
-        for i, rows in enumerate(batches)
+        for rows in batches
         for doc_id, text in rows
         if text is not None
     }
-    bands = _band_sets(spark, texts)
-    order = {
-        doc_id: (i, doc_id)
-        for i, rows in enumerate(batches)
-        for doc_id, _ in rows
-    }
-    unclassified = _classify(disagreements, texts, bands, order, st)
-    assert not unclassified, (
-        "disagreements outside the documented chain class: "
-        f"{unclassified}"
+    sim = _simulate_state_engine(
+        _unbounded(batches), _band_sets(spark, texts), None
     )
-
-
-def _classify(disagreements, texts, bands, order, st):
-    """Chain-class classifier: a disagreement doc must share a band
-    bucket with some EARLIER-presented doc the state engine dropped,
-    and with NO earlier state survivor (a survivor bucket-mate is in
-    both indexes and both engines would have dropped it)."""
-    unclassified = []
-    for x in disagreements:
-        earlier = [d for d in texts if order[d] < order[x]]
-        dropped_mates = [
-            d for d in earlier if d not in st and bands[d] & bands[x]
-        ]
-        survivor_mates = [
-            d for d in earlier if d in st and bands[d] & bands[x]
-        ]
-        if not dropped_mates or survivor_mates:
-            unclassified.append((x, dropped_mates, survivor_mates))
-    return unclassified
+    assert st == sim, (
+        f"engine-only: {sorted(st - sim)}; sim-only: {sorted(sim - st)}"
+    )
 
 
 def test_engine_divergence_law_holds_on_random_mutation_forests(
     spark, tmp_path
 ):
-    """The subset law and the chain classifier are corpus-INDEPENDENT
-    claims — check them on seeded random mutation forests (depth-3
-    chains at random mutation rates, exact dups, nulls, shorts, no tie
-    avoidance: both engines use first-arrival/min-id keepers, so ties
-    cannot cause divergence here), without asserting which specific
-    docs diverge."""
+    """The exact-model law is corpus-INDEPENDENT — check it on seeded
+    random mutation forests (depth-3 chains at random mutation rates,
+    exact dups, nulls, shorts, no tie avoidance: the engine's keepers
+    are first-arrival/min-id, which the model encodes), without
+    asserting which specific docs the chains drop."""
     rng = random.Random(2718)
     texts_by_id: dict[int, str | None] = {}
     batches: list[list[tuple[int, str | None]]] = [[] for _ in range(4)]
@@ -281,7 +238,6 @@ def test_engine_divergence_law_holds_on_random_mutation_forests(
     add(1, "one two")
     add(2, "one two")
 
-    pq = _run_parquet_engine(spark, str(tmp_path / "pq"), batches)
     st = _run_state_engine(
         spark,
         str(tmp_path / "st"),
@@ -289,20 +245,25 @@ def test_engine_divergence_law_holds_on_random_mutation_forests(
         str(tmp_path / "src"),
         batches,
     )
-    assert st <= pq, f"subset law violated: {st - pq}"
     texts = {i: t for i, t in texts_by_id.items() if t is not None}
-    bands = _band_sets(spark, texts)
-    order = {
-        doc_id: (i, doc_id)
-        for i, rows in enumerate(batches)
-        for doc_id, _ in rows
-    }
-    unclassified = _classify(pq - st, texts, bands, order, st)
-    assert not unclassified, unclassified
-    # bypass classes never disagree
+    sim = _simulate_state_engine(
+        _unbounded(batches), _band_sets(spark, texts), None
+    )
+    assert st == sim, (
+        f"engine-only: {sorted(st - sim)}; sim-only: {sorted(sim - st)}"
+    )
+    # bypass classes never reach the fuzzy stage: every null doc
+    # survives, and a short doc is dropped only as an exact re-arrival
+    first_id = {}
+    for rows in batches:
+        for doc_id, text in rows:
+            first_id.setdefault(text, doc_id)
     null_short = {i for i, t in texts_by_id.items()
                   if t is None or len(t.split()) < 3}
-    assert (pq ^ st) & null_short == set()
+    assert null_short & st == {
+        i for i in null_short
+        if texts_by_id[i] is None or first_id[texts_by_id[i]] == i
+    }
 
 
 def _simulate_state_engine(batches, bands, horizon_s):

@@ -1,14 +1,14 @@
-"""State-store streaming doc dedup (the flat-cost sibling engine):
-exact + fuzzy dedup against everything seen so far, with membership as
-state-store point lookups instead of per-batch store scans.
+"""State-store streaming doc dedup: exact + fuzzy dedup against
+everything seen so far, with membership as state-store point lookups
+instead of per-batch store scans.
 
 Semantics note pinned here: band-bucket occupancy is FIRST-PRESENTER
 (a doc that is itself dropped still seeds its band buckets), so a later
 near-dup of a dropped doc is dropped too — chain/transitive dropping,
-the same law the parquet engine applies within a batch and q50's
-connected-component survivors apply globally. The parquet engine
-anchors cross-batch occupancy on survivors only; both are deterministic
-and documented."""
+the same law the engine's batch-local stage applies within a batch and
+q50's connected-component survivors apply globally. Deterministic, and
+pinned doc-for-doc against an exact model in
+``tests/test_dedup_engines_differential.py``."""
 
 from __future__ import annotations
 

@@ -6,7 +6,6 @@ from weather_monitoring_spark.streaming.archive import (
     wire_to_canonical,
 )
 from weather_monitoring_spark.streaming.continuous_agg import ContinuousRollup
-from weather_monitoring_spark.streaming.doc_dedup import StreamingDocDedup
 from weather_monitoring_spark.streaming.joins import (
     interval_attribution,
     streaming_dedup,
@@ -29,7 +28,6 @@ from weather_monitoring_spark.streaming.windows import (
 __all__ = [
     "ContinuousRollup",
     "LatestView",
-    "StreamingDocDedup",
     "attach_index_sink",
     "compact_archive",
     "fs_bulk_upsert",

@@ -1,13 +1,11 @@
-"""Streaming document dedup on Spark's OWN streaming state — the
-flat-cost sibling of :mod:`weather_monitoring_spark.streaming.doc_dedup`.
-
-The parquet-store engine keeps the seen-corpus index as immutable
-columnar runs and answers membership with a per-batch store SCAN. Its
-shuffle volume is O(batch), but the scan itself grows linearly with the
-corpus (measured: 3.8 s -> 6.6 s per batch across 1M accumulated docs,
-probe JSON committed) — at 100 TB a scan per 10 s trigger is the wrong
-trade. The scan-free answer is POINT LOOKUPS against keyed streaming
-state.
+"""Streaming document dedup on Spark's OWN streaming state: exact +
+fuzzy dedup of every document against everything seen so far, with
+membership answered as POINT LOOKUPS against keyed streaming state.
+No trigger scans a seen-corpus index, so per-batch cost stays flat as
+the corpus grows (measured: late/early per-batch wall 1.00 / 0.99 /
+0.82 for the three stages across 1.1M offered docs,
+``scripts/probe_dedup_state_growth.json``). Exactly-once comes from
+each query's offset log plus keyed state and idempotent sinks.
 
 HOW the lookups run matters as much as that they exist. The first cut
 of this engine used ``applyInPandasWithState``; it was semantically
@@ -27,8 +25,8 @@ the composition stays end-to-end exactly-once):
 
   Q1 (batch-local keepers, stateless): docs -> fp (NULL-text sentinel,
      the r12 null-identity contract) -> WITHIN the micro-batch: min-id
-     keeper per fp, then min-id keeper per MinHash band bucket (the
-     parquet engine's 2a law) -> ``<out>/local/batch_id=N``, each row
+     keeper per fp, then min-id keeper per MinHash band bucket ->
+     ``<out>/local/batch_id=N``, each row
      carrying its 27 band keys as a ``bands`` array column (r15): the
      signature build — the chain's most expensive projection — runs
      ONCE here and rides Q2's pass-through sink to Q3 as ~220 B/doc of
@@ -80,11 +78,10 @@ null-identity class. They route straight to the corpus sink.
 
 Band-bucket occupancy is FIRST-PRESENTER (a doc that is itself dropped
 still claimed its fresh buckets), so a later near-dup of a dropped doc
-is dropped too — chain dropping, the law the parquet engine applies
-within a batch and q50's connected-component survivors apply globally.
-The parquet engine anchors cross-batch occupancy on survivors only;
-both are deterministic and the trade is documented here and in the
-tests.
+is dropped too — chain dropping, the law Q1 applies within a batch and
+q50's connected-component survivors apply globally. It is
+deterministic, and ``tests/test_dedup_engines_differential.py`` pins it
+doc-for-doc against an exact pure-Python model.
 
 State sizing: one native state row per distinct fingerprint + one per
 distinct band key (~LSH_BANDS x docs). The default HDFS-backed provider
@@ -93,11 +90,9 @@ real scale set ``spark.sql.streaming.stateStore.providerClass`` to the
 RocksDB provider (changelog-checkpointed, spills to disk) — a config
 flip, not a code change.
 
-Trade vs the parquet engine: no queryable band/fingerprint TABLES (the
-index lives inside the state store), and survivors appear two triggers
-later (three-query pipeline). Pick this engine for unbounded high-rate
-streams; pick the parquet engine when the index itself must be a
-first-class table.
+Trade: the band/fingerprint index lives inside the state store, so it
+is not a queryable table, and survivors appear two triggers after
+arrival (three-query pipeline).
 """
 
 from __future__ import annotations

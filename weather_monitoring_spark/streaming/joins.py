@@ -15,9 +15,9 @@ machinery (no custom state stores):
   bucketed range join (plans/extra_checks.x_range_join) — same
   semantics, same result on on-time data.
 - **streaming_dedup**: exact dedup across micro-batches via
-  ``dropDuplicatesWithinWatermark`` — the engine-native counterpart of
-  the bespoke corpus-history dedup in streaming/doc_dedup.py, for the
-  common case where "seen" only needs to span the watermark horizon
+  ``dropDuplicatesWithinWatermark`` — the horizon-scoped counterpart of
+  the unbounded corpus-history dedup in streaming/doc_dedup_state.py, for
+  the common case where "seen" only needs to span the watermark horizon
   (e.g. at-least-once sources replaying the recent past). State is
   O(keys within the watermark), not O(all keys ever).
 """

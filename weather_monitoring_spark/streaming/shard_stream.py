@@ -19,8 +19,8 @@ Semantics:
 - Exactly-once on restart: each batch writes (overwrite) into its own
   ``batch_id=N`` subtree, so a replayed partially-written batch
   replaces itself instead of appending next to itself — the
-  ``StreamingDocDedup``/archive partition-overwrite recipe
-  (streaming/doc_dedup.py:74). The checkpoint makes Spark re-offer the
+  partition-overwrite recipe of ``StateStoreDocDedup.local_batch`` and
+  streaming/archive.py. The checkpoint makes Spark re-offer the
   same source rows under the same batch_id.
 - Each batch directory carries the standard shard manifest
   (``_manifest`` — row counts, token totals, content checksums), so

@@ -6,8 +6,10 @@ maxFilesPerTrigger=1) of BATCH_DOCS docs with 10% exact re-arrivals and
 5% near-dup rewrites of earlier documents. Per-batch wall times come
 from Spark's OWN StreamingQueryProgress (triggerExecution ms), polled
 during the run — no wrapper timing noise. The claim: per-batch time for
-BOTH stages is independent of accumulated corpus size (state-store
-point lookups; no per-batch store scan), so late/early medians stay ~1.
+BOTH queries (batch-local keepers, stateful dedup) is independent of
+accumulated corpus size (state-store point lookups; no per-batch store
+scan), so late/early medians stay ~1. The committed JSON predates the
+exact+fuzzy fold into one query.
 
 Run: python scripts/probe_dedup_state_growth.py [N_BATCHES]
 Writes scripts/probe_dedup_state_growth.json.
@@ -115,12 +117,10 @@ def main() -> None:
         os.path.join(work, "ckpt"),
         trigger={"processingTime": "0 seconds"},
         output_files_per_batch=1,
-        fuzzy_max_files_per_trigger=1,
     )
     local_t: dict = {}
-    exact_t: dict = {}
-    fuzzy_t: dict = {}
-    timings = (local_t, exact_t, fuzzy_t)
+    dedup_t: dict = {}
+    timings = (local_t, dedup_t)
     t0 = time.time()
     try:
         while time.time() - t0 < 3600:
@@ -156,8 +156,7 @@ def main() -> None:
         "docs_offered": N_BATCHES * BATCH_DOCS,
         "corpus_survivors": corpus_n,
         "local_stage": stats(local_t),
-        "exact_stage": stats(exact_t),
-        "fuzzy_stage": stats(fuzzy_t),
+        "dedup_stage": stats(dedup_t),
     }
     path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),

@@ -5,17 +5,18 @@ accumulated docs on the RocksDB provider and gives the 1B-doc
 extrapolation recorded in BASELINE.md.
 
 Same workload as probe_dedup_state_growth.py (220 batches x 5k docs,
-10% exact re-arrivals, 5% near-dup rewrites). Metrics per stateful
-stage (Q2 exact fp state, Q3 fuzzy claim state), from Spark's OWN
-StreamingQueryProgress stateOperators (polled per batch):
+10% exact re-arrivals, 5% near-dup rewrites). Metrics per state
+operator of the dedup query (exact fp state, fuzzy claim state), from
+Spark's OWN StreamingQueryProgress stateOperators (polled per batch):
 
 - numRowsTotal           state rows (the row-count law, checked exactly)
 - customMetrics.rocksdbSstFileSize   live on-disk SST bytes — the real
                          durable per-key footprint
 - customMetrics.rocksdbTotalMemoryUsage  resident RocksDB memory
 
-plus a final du of each checkpoint state directory (includes retained
+plus a final du of each operator's state directory (includes retained
 old versions + changelogs — the recovery footprint, NOT the live size).
+The committed JSON predates the exact+fuzzy fold into one query.
 
 Run: python scripts/probe_dedup_state_size.py [N_BATCHES]
 Writes scripts/probe_dedup_state_size.json.
@@ -39,15 +40,16 @@ from probe_dedup_state_growth import N_BATCHES as _DEFAULT_BATCHES
 from probe_dedup_state_growth import BATCH_DOCS, write_batch_file
 
 N_BATCHES = int(sys.argv[1]) if len(sys.argv) > 1 else _DEFAULT_BATCHES
+CLAIM_OP, FP_OP = 0, 1  # the claim dedup sits above the fp dedup
 
 
-def state_ops(q, seen: dict) -> None:
+def state_ops(q, seen: dict, op_idx: int) -> None:
     for p in q.recentProgress:
         bid = p["batchId"]
         ops = p.get("stateOperators") or []
         if not ops or p["numInputRows"] == 0:
             continue
-        op = ops[0]
+        op = ops[op_idx]
         cm = op.get("customMetrics", {})
         seen[bid] = {
             "rows": op.get("numRowsTotal"),
@@ -102,7 +104,6 @@ def main() -> None:
         ckpt,
         trigger={"processingTime": "0 seconds"},
         output_files_per_batch=1,
-        fuzzy_max_files_per_trigger=1,
     )
     exact_m: dict = {}
     fuzzy_m: dict = {}
@@ -110,8 +111,8 @@ def main() -> None:
     try:
         while time.time() - t0 < 3600:
             time.sleep(3)
-            state_ops(queries[1], exact_m)
-            state_ops(queries[2], fuzzy_m)
+            state_ops(queries[1], exact_m, FP_OP)
+            state_ops(queries[1], fuzzy_m, CLAIM_OP)
             if (
                 len(exact_m) >= N_BATCHES
                 and len(fuzzy_m) >= N_BATCHES
@@ -158,8 +159,8 @@ def main() -> None:
         "exact_fp_state": summarize(exact_m, docs),
         "fuzzy_claim_state": summarize(fuzzy_m, docs),
         "checkpoint_du_bytes": {
-            "exact_state_dir": du_bytes(os.path.join(ckpt, "exact", "state")),
-            "fuzzy_state_dir": du_bytes(os.path.join(ckpt, "fuzzy", "state")),
+            "exact_state_dir": du_bytes(f"{ckpt}/dedup/state/{FP_OP}"),
+            "fuzzy_state_dir": du_bytes(f"{ckpt}/dedup/state/{CLAIM_OP}"),
         },
     }
     # 1B-doc extrapolation from the live SST footprint (linear in keys:

@@ -3,10 +3,11 @@ curation chain (VERDICT r14 #6): the e2e probe ran the whole chain in
 lockstep (every stage saw exactly one upstream batch per trigger); a
 real feed arrives BURSTY and a restarted consumer starts LAGGED. This
 probe delivers the full corpus to the gate stage first, then starts
-Q1..QS cold — each downstream stage's first triggers merge MANY
-upstream batches (the documented multi-batch catch-up regime,
-``StateStoreDocDedup.attach_exact`` determinism note: the dedup SET
-stays correct, keeper identity becomes merge-arbitrated).
+Q1, QD and QS cold — Q1's first trigger merges MANY gate batches
+(arrival-ordered keepers, ``StateStoreDocDedup.local_batch``
+``arrival_col``), and QD reads Q1's output one file per trigger
+(``StateStoreDocDedup.attach_dedup`` determinism note), so catch-up
+must keep the lockstep survivors.
 
 Asserts: streaming survivor CONTENT set == batch path's on the same
 bytes (the e2e generator's chain-free corpus), every survivor packed
@@ -149,7 +150,7 @@ def main() -> None:
         )
 
     per_q, last_end = {}, t1
-    for name, q in zip(("local", "exact", "fuzzy", "shards"), tail):
+    for name, q in zip(("local", "dedup", "shards"), tail):
         rows = [
             (_ts(p), p["durationMs"].get("triggerExecution", 0) / 1000.0,
              p["numInputRows"])

@@ -1,6 +1,7 @@
 """Composed streaming-curation probe (VERDICT r13 #5): WARC segments
-delivered INCREMENTALLY (live-crawl shape) through the full five-query
-chain — gates -> state-store dedup (Q1/Q2/Q3) -> streaming shards —
+delivered INCREMENTALLY (live-crawl shape) through the full query
+chain — gates (with Q1 fused in) -> state-store dedup (QD) -> streaming
+shards —
 with the batch path (one ``curate_crawl`` over the closed corpus) run
 on the same bytes as the ground truth.
 
@@ -235,7 +236,7 @@ def main() -> None:
     par32_pre = _par32()
     t0 = time.time()
     # fuse_local (r15): Q1's batch-local keepers run inside the gate
-    # trigger — 4 chained queries instead of 5, one fewer file-handoff
+    # trigger — 3 chained queries instead of 4, one fewer file-handoff
     # round trip per batch; semantics pinned equal by the e2e test.
     queries = cur.attach(
         docs,
@@ -292,7 +293,7 @@ def main() -> None:
         )
 
     per_q, intervals, last_end, total_busy = {}, [], t0, 0.0
-    for name, q in zip(("gates+local", "exact", "fuzzy", "shards"), queries):
+    for name, q in zip(("gates+local", "dedup", "shards"), queries):
         durs, q_last = [], t0
         for p in q.recentProgress:
             if p["numInputRows"] > 0:

@@ -4,6 +4,8 @@ with new data arriving between checkpointed restarts."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from weather_monitoring_spark.operators.core import with_partition_cols
@@ -45,6 +47,13 @@ def test_incremental_equals_batch_recompute_and_replay_is_noop(spark, tmp_path):
     rollup.merge_batch(b2, batch_id=1)
     again = rollup.read()
     assert again.exceptAll(exp).count() == 0 and exp.exceptAll(again).count() == 0
+
+    # crash between the swap's two renames leaves only <view>.old (data
+    # and marker); the replay must restore it, not start from empty
+    os.rename(rollup.view_dir, rollup.view_dir + ".old")
+    rollup.merge_batch(b2, batch_id=1)
+    healed = rollup.read()
+    assert healed.exceptAll(exp).count() == 0 and exp.exceptAll(healed).count() == 0
     full.unpersist()
 
 

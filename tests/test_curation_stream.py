@@ -539,8 +539,9 @@ def test_url_ttl_matches_exact_simulation_on_random_recrawls(
         base = f"http://s{site}.example/page"
         # at most ONE variant per site per batch: QU has no Q1-style
         # within-batch uniquifier, so two same-canonical docs in one
-        # micro-batch keep an ARBITRARY member (the attach_exact
-        # catch-up caveat) — the simulation pins cross-batch law only
+        # micro-batch keep an ARBITRARY member (dropDuplicates keeps
+        # any one same-key row of a trigger) — the simulation pins
+        # cross-batch law only
         for b in sorted(rng.sample(range(len(gaps)), rng.randrange(1, 4))):
             nid += 1
             ts = gaps[b] + rng.randrange(0, 60)

@@ -6,13 +6,15 @@ The model (``_simulate_state_engine``), given each doc's REAL band set:
 
 - Q1, within a batch: min-id keeper per fingerprint (NULL text is a
   per-doc sentinel), then min-id keeper per band bucket;
-- Q2, exact vs history: a fingerprint presented in an earlier batch
-  drops the doc;
-- Q3, fuzzy vs history: band-bucket claims are FIRST-PRESENTER — a doc
-  survives iff none of its buckets was claimed before, and a doc that
-  is itself dropped still claims its fresh buckets, so a later near-dup
-  of ONLY a dropped doc is dropped too (chain dropping);
-- NULL-text and shingle-less docs bypass Q3.
+- the dedup query's fp stage, exact vs history: a fingerprint
+  presented in an earlier batch drops the doc;
+- its claim stage, fuzzy vs history: band-bucket claims are
+  FIRST-PRESENTER — a doc survives iff none of its buckets was claimed
+  before, and a doc that is itself dropped still claims its fresh
+  buckets, so a later near-dup of ONLY a dropped doc is dropped too
+  (chain dropping);
+- NULL-text and shingle-less docs claim only a per-doc key, so they
+  survive once they pass the fp stage.
 
 Unbounded history (``horizon_s=None``) is the engine default; the
 bounded mode adds the TTL law the horizon test pins.
@@ -116,7 +118,6 @@ def _run_state_engine(
             ckpt,
             trigger={"availableNow": True},
             output_files_per_batch=1,
-            fuzzy_max_files_per_trigger=1,
         )
         for q in queries:
             q.awaitTermination()
@@ -126,8 +127,8 @@ def _run_state_engine(
     # batch order (dumping all files upfront lets the file source's
     # mtime sort tie-break arbitrarily, which scrambles first-arrival
     # semantics; ordered arrival is the engine's documented determinism
-    # precondition, attach_exact docstring). Two extra waves flush the
-    # 3-stage pipeline; maxFilesPerTrigger=1 + one file per logical
+    # precondition, attach_dedup docstring). Two extra waves flush the
+    # 2-query pipeline; maxFilesPerTrigger=1 + one file per logical
     # batch keeps the 1:1 pairing.
     for i, rows in enumerate(batches):
         with open(os.path.join(src, f"b{i:03d}.json"), "w") as f:
@@ -274,16 +275,16 @@ def _simulate_state_engine(batches, bands, horizon_s):
     KEPT occurrence's event time + horizon, a dropped duplicate does
     NOT extend it (pinned by the id-4 probe in this repo's r15 session:
     A@10:00, dup A@10:30 dropped, wm -> 11:15, A@12:20 KEPT — expiry
-    stayed 11:00), each query's watermark advances at batch end to the
-    max event time of ITS OWN input minus the horizon (so Q3's
-    watermark lags Q2's when Q2 drops the newest rows), and eviction
-    compares expiry to the watermark set by PREVIOUS batches.
+    stayed 11:00), the dedup query's one watermark advances at batch
+    end to the max event time of its input minus the horizon and
+    serves both state operators, and eviction compares expiry to the
+    watermark set by PREVIOUS batches.
     ``batches``: [[(doc_id, text|None, ts_seconds)]]."""
     inf = float("inf")
     h = inf if horizon_s is None else horizon_s
     fp_state: dict = {}
     claim_state: dict = {}
-    wm_q2 = wm_q3 = -inf
+    wm = -inf
     survivors: set = set()
     for rows in batches:
         # Q1 (stateless): min-id keeper per fp (text identity; NULL
@@ -305,32 +306,30 @@ def _simulate_state_engine(batches, bands, horizon_s):
         ]
         if not q1_out:
             continue
-        # Q2: exact-vs-history fp state
-        q2_out = []
+        # fp stage: exact-vs-history fp state
+        fp_out = []
         for doc_id, text, ts in q1_out:
             key = ("t", text) if text is not None else ("n", doc_id)
-            if key in fp_state and fp_state[key] > wm_q2:
+            if key in fp_state and fp_state[key] > wm:
                 continue  # duplicate within the horizon; no extension
             fp_state[key] = ts + h
-            q2_out.append((doc_id, text, ts))
-        wm_q2 = max(wm_q2, max(ts for _, _, ts in q1_out) - h)
-        if not q2_out:
-            continue
-        # Q3: first-presenter band claims; null/shingle-less bypass
-        for doc_id, text, ts in q2_out:
+            fp_out.append((doc_id, text, ts))
+        # claim stage: first-presenter band claims; null/shingle-less
+        # docs hold a per-doc key no other doc presents
+        for doc_id, text, ts in fp_out:
             bs = bands.get(doc_id, set())
             if text is None or not bs:
                 survivors.add(doc_id)
                 continue
             lost = False
             for b in bs:
-                if b in claim_state and claim_state[b] > wm_q3:
+                if b in claim_state and claim_state[b] > wm:
                     lost = True  # bucket held; claim NOT re-inserted
                 else:
                     claim_state[b] = ts + h
             if not lost:
                 survivors.add(doc_id)
-        wm_q3 = max(wm_q3, max(ts for _, _, ts in q2_out) - h)
+        wm = max(wm, max(ts for _, _, ts in q1_out) - h)
     return survivors
 
 

@@ -42,8 +42,8 @@ def _run_until_drained(spark, dd, src, ckpt, expect_ids, timeout=120):
         ckpt,
         trigger={"processingTime": "1 second"},
         output_files_per_batch=1,
-        fuzzy_max_files_per_trigger=1,
     )
+    assert len(queries) == 2
     got = None
     t0 = time.time()
     try:
@@ -55,6 +55,8 @@ def _run_until_drained(spark, dd, src, ckpt, expect_ids, timeout=120):
                 got = None
             if got == sorted(expect_ids):
                 break
+        # one dedup query: the fp state and the claim state, nothing else
+        assert len(queries[1].lastProgress["stateOperators"]) == 2
     finally:
         for q in queries:
             q.stop()
@@ -170,10 +172,14 @@ def test_state_engine_bounded_horizon_expires_and_readmits(spark, tmp_path):
             str(tmp_path / "ckpt"),
             trigger={"availableNow": True},
             output_files_per_batch=1,
-            fuzzy_max_files_per_trigger=1,
         )
+        assert len(queries) == 2
         for q in queries:
             q.awaitTermination()
+        ops.update(len(p["stateOperators"])
+                   for p in queries[1].recentProgress if p["numInputRows"])
+
+    ops = set()
 
     batches = [
         # b0: originals
@@ -195,6 +201,7 @@ def test_state_engine_bounded_horizon_expires_and_readmits(spark, tmp_path):
     wave()
     got = sorted(r.doc_id for r in dd.corpus().collect())
     assert got == [1, 2, 5, 6, 7], got
+    assert ops == {2}
     # the corpus carries the event-time column in horizon mode
     assert "ts" in dd.corpus().columns
 
@@ -233,3 +240,25 @@ def test_arrival_ordered_keepers_on_merged_batches(spark, tmp_path):
     # bare min-id (the pre-fix law, still the contract for single-batch
     # triggers where arrival is constant): the near-dup's smaller id wins
     assert survivors(None) == [5]
+
+    # ...and the dedup query never merges two Q1 batches into one
+    # trigger: publish originals, then their near-dups, as two Q1
+    # batches BEFORE it starts; one availableNow run must keep every
+    # original and drop every near-dup, exactly as in lockstep (a merged
+    # trigger lets a near-dup win a shared bucket whenever its rows reach
+    # the claim operator first, so six pairs make that all but certain)
+    dd = StateStoreDocDedup(spark, str(tmp_path / "dd_backlog"))
+    origs = {10 + i: _varied(f"p{i}w") for i in range(6)}
+    nears = {i: " ".join(t.split()[:-1]) for i, t in enumerate(origs.values())}
+    for arr, docs in enumerate((origs, nears)):
+        batch = spark.createDataFrame(
+            list(docs.items()), "doc_id long, text string"
+        )
+        dd.local_batch(batch, arr, output_files_per_batch=1)
+    q = dd.attach_dedup(
+        str(tmp_path / "ckpt_backlog"),
+        trigger={"availableNow": True},
+        output_files_per_batch=1,
+    )
+    q.awaitTermination()
+    assert sorted(r.doc_id for r in dd.corpus().collect()) == sorted(origs)

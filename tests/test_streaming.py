@@ -140,6 +140,15 @@ def test_latest_view_merge_and_replay(spark, tmp_path):
     assert view.get(station_id=some_id).count() == 1
     v2.unpersist()
 
+    # crash between the swap's two renames leaves only <view>.old; the
+    # replayed batch must merge into the full view, not an empty one
+    # (compared with `expected`: a read of the view path would hit v2's
+    # cache while it is persisted)
+    os.rename(view.view_dir, view.view_dir + ".old")
+    view.merge_batch(b1)
+    v4 = view.get_all().select("station_id", "s_no")
+    assert v4.exceptAll(expected).count() == 0 and expected.exceptAll(v4).count() == 0
+
 
 def test_rain_alerts(spark):
     wire = synthetic_wire_batch(spark, 1000, seed=3)

@@ -11,10 +11,10 @@ on an at-least-once channel.
 
 The batch-id marker lives INSIDE the view directory (``_last_batch_id``,
 underscore-prefixed so parquet readers ignore it) and is written into the
-tmp directory BEFORE the single atomic rename swap — view data and marker
-commit together. A sibling meta file updated after the swap would leave a
-window where a crash yields a view that already absorbed the batch with a
-stale id, double-counting on replay.
+tmp directory BEFORE the rename swap (``latest_view.swap_view``) — view
+data and marker commit together. A sibling meta file updated after the
+swap would leave a window where a crash yields a view that already
+absorbed the batch with a stale id, double-counting on replay.
 
 Merge math: each batch reduces to partial (cnt, sum) per group —
 commutative + associative, so merging partials into the view is one
@@ -28,11 +28,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from weather_monitoring_spark.streaming.latest_view import swap_view
 
 GROUP_COLS = ["station_id", "date", "hour"]
 
@@ -82,37 +83,30 @@ class ContinuousRollup:
             return json.load(f).get("last_batch_id", -1)
 
     def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._last_applied():
-            return  # replayed batch: already absorbed -> exactly-once effect
-        partials = _batch_partials(batch_df)
-        if os.path.exists(self.view_dir):
-            current = self.spark.read.parquet(self.view_dir)
-            merged = (
-                current.unionByName(partials)
-                .groupBy(*GROUP_COLS)
-                .agg(
-                    F.sum("cnt").alias("cnt"),
-                    F.sum("sum_temperature").alias("sum_temperature"),
-                    F.max("max_wind_speed").alias("max_wind_speed"),
-                    F.min("min_humidity").alias("min_humidity"),
+        def write(tmp: str, exists: bool) -> bool:
+            if batch_id <= self._last_applied():
+                return False  # replayed batch: already absorbed
+            merged = _batch_partials(batch_df)
+            if exists:
+                merged = (
+                    self.spark.read.parquet(self.view_dir)
+                    .unionByName(merged)
+                    .groupBy(*GROUP_COLS)
+                    .agg(
+                        F.sum("cnt").alias("cnt"),
+                        F.sum("sum_temperature").alias("sum_temperature"),
+                        F.max("max_wind_speed").alias("max_wind_speed"),
+                        F.min("min_humidity").alias("min_humidity"),
+                    )
                 )
-            )
-        else:
-            merged = partials
-        tmp = self.view_dir + ".tmp"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        # Commit marker INSIDE tmp before the swap: the rename below is the
-        # single atomic commit point for data + batch id together.
-        with open(os.path.join(tmp, self.MARKER), "w") as f:
-            json.dump({"last_batch_id": batch_id}, f)
-        old = self.view_dir + ".old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(self.view_dir):
-            os.rename(self.view_dir, old)
-        os.rename(tmp, self.view_dir)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+            merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+            # Commit marker INSIDE tmp before the swap: the view rename is
+            # the commit point for data + batch id together.
+            with open(os.path.join(tmp, self.MARKER), "w") as f:
+                json.dump({"last_batch_id": batch_id}, f)
+            return True
+
+        swap_view(self.view_dir, write)
 
     def attach(
         self,

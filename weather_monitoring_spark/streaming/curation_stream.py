@@ -2,8 +2,8 @@
 an UNBOUNDED crawl feed (VERDICT r13 #5): WARC/WET segments landing in
 a directory flow through per-micro-batch quality gates, cross-batch
 exact+fuzzy dedup on the scan-free state-store engine, and the
-token-budgeted streaming shard packer — five chained checkpointed
-queries (four with ``fuse_local=True``: Q1 is stateless per batch and
+token-budgeted streaming shard packer — four chained checkpointed
+queries (three with ``fuse_local=True``: Q1 is stateless per batch and
 can run inside the gate trigger), each handoff either a transactional
 streaming file sink or the staged atomic-rename publish
 (doc_dedup_state._atomic_promote), so the composition stays end-to-end
@@ -21,21 +21,22 @@ Topology:
      gates are per-batch properties; ALL content dedup is delegated
      downstream so it can be cross-batch.
 
-  Q1/Q2/Q3 (state-store dedup): ``doc_dedup_state.StateStoreDocDedup``
-     attached to QA's sink — batch-local keepers, exact-vs-history fp
-     state, fuzzy-vs-history band-claim state; survivors land in
+  Q1/QD (state-store dedup): ``doc_dedup_state.StateStoreDocDedup``
+     attached to QA's sink — batch-local keepers, then one query
+     holding the exact-vs-history fp state and the fuzzy-vs-history
+     band-claim state; survivors land in
      ``<out>/dedup/corpus/batch_id=N`` (atomically published).
 
-  QS (shards): Q3's corpus read as a file stream (the Q2 reader recipe:
+  QS (shards): QD's corpus read as a file stream (QD's reader recipe:
      declared batch_id partition + ignoreMissingFiles) through a
      stateful ``dropDuplicates(["doc_id"])`` into
      ``streaming/shard_stream.attach_shard_stream`` — per-batch
      token-budgeted shards with manifests under ``<out>/shards/``. The
-     doc_id state is QS's replay absorber: Q3's handoff is the staged
-     atomic rename, so a Q3 crash-replay after the promote but before
+     doc_id state is QS's replay absorber: QD's handoff is the staged
+     atomic rename, so a QD crash-replay after the promote but before
      its checkpoint commit republishes ``corpus/batch_id=N`` with fresh
      part-file names and QS's reader re-offers those rows; unlike
-     Q2/Q3, the packer has no dedup state of its own, so without this
+     QD, the packer has no dedup state of its own, so without this
      absorber re-delivered docs would be packed into shards twice
      (at-least-once at the shard boundary — the r14 advisor finding).
      One native state row per surviving doc_id, bounded by the corpus
@@ -233,8 +234,8 @@ class StreamingCuration:
     ) -> StreamingQuery:
         """Cross-batch URL-identity dedup: first arrival of each
         CANONICAL url wins, held in native streaming state; url-unique
-        raw pages land in a transactional parquet file sink (exactly
-        the Q2 handoff recipe, so the gate stage consumes it safely)."""
+        raw pages land in a transactional parquet file sink, so the
+        gate stage consumes it safely."""
         from weather_monitoring_spark.operators.urlops import (
             canonical_url_expr,
         )
@@ -329,7 +330,7 @@ class StreamingCuration:
             # gate signal column. One eager localCheckpoint of the
             # trigger-sized input + the "gates" pin mode (extracted /
             # url_unique / curated only — the dedup stages delegated to
-            # Q1-Q3 stay unevaluated) makes every downstream reference
+            # Q1/QD stay unevaluated) makes every downstream reference
             # read the pin.
             pinned = batch_df.localCheckpoint(eager=True)
             # bench=None warns by design (decontamination is a
@@ -453,7 +454,7 @@ class StreamingCuration:
         ).select(
             "doc_id", "text", *((self.ts_col,) if self.ts_col else ())
         )
-        # Replay absorber (module docstring, QS): a Q3 crash-replay
+        # Replay absorber (module docstring, QS): a QD crash-replay
         # after _atomic_promote republishes its corpus batch with fresh
         # part-file names and this reader re-offers the rows; the packer
         # has no dedup state, so absorb re-deliveries in native state
@@ -506,14 +507,14 @@ class StreamingCuration:
         max_files_per_trigger: int | None = None,
         include_local: bool = True,
     ) -> tuple[StreamingQuery, ...]:
-        """Start everything DOWNSTREAM of the gate stage — (Q1, Q2, Q3,
-        QS), or (Q2, Q3, QS) with ``include_local=False`` when the gate
-        stage fused Q1 into itself. Split out of :meth:`attach` so a
-        catch-up / backpressure scenario can start these LATER than the
-        gate stage: on a lagged start many gate batches merge into one
-        micro-batch per stage — the dedup SET stays correct, only the
-        keeper identity follows the merged-batch arbitration
-        (``StateStoreDocDedup.attach_exact`` determinism note)."""
+        """Start everything DOWNSTREAM of the gate stage — (Q1, QD, QS),
+        or (QD, QS) with ``include_local=False`` when the gate stage
+        fused Q1 into itself. Split out of :meth:`attach` so a catch-up
+        / backpressure scenario can start these LATER than the gate
+        stage: on a lagged start Q1 merges many gate batches into one
+        arrival-ordered micro-batch, and QD reads Q1's output one file
+        per trigger (``StateStoreDocDedup.attach_dedup`` determinism
+        note), so the survivors equal the lockstep run's."""
         ts_part = f", {self.ts_col} timestamp" if self.ts_col else ""
         ts_sel = (self.ts_col,) if self.ts_col else ()
         dedup_ckpt = os.path.join(checkpoint_root, "dedup")
@@ -547,24 +548,15 @@ class StreamingCuration:
                 arrival_col="batch_id",
             )
             qs_head = (q1,)
-        q2 = self.dedup.attach_exact(
-            os.path.join(dedup_ckpt, "exact"),
-            trigger,
-            max_files_per_trigger=max_files_per_trigger,
-            output_files_per_batch=output_files_per_batch,
-        )
-        q3 = self.dedup.attach_fuzzy(
-            os.path.join(dedup_ckpt, "fuzzy"),
-            trigger,
-            max_files_per_trigger=max_files_per_trigger,
-            output_files_per_batch=output_files_per_batch,
+        qd = self.dedup.attach_dedup(
+            os.path.join(dedup_ckpt, "dedup"), trigger, output_files_per_batch
         )
         qs = self.attach_shards(
             os.path.join(checkpoint_root, "shards"),
             trigger,
             max_files_per_trigger=max_files_per_trigger,
         )
-        return (*qs_head, q2, q3, qs)
+        return (*qs_head, qd, qs)
 
     def attach(
         self,
@@ -575,13 +567,13 @@ class StreamingCuration:
         max_files_per_trigger: int | None = None,
         fuse_local: bool = False,
     ) -> tuple[StreamingQuery, ...]:
-        """Start the full query chain; returns (QA, Q1, Q2, Q3, QS) —
+        """Start the full query chain; returns (QA, Q1, QD, QS) —
         prefixed with QU when ``url_dedup_scope="global"``, and without
         Q1 when ``fuse_local=True`` (the gate stage runs the batch-local
         keepers inside its own trigger; :meth:`attach_gates`). One-file-
         per-batch + maxFilesPerTrigger=1 preserves batch granularity
-        across every handoff (the dedup determinism contract,
-        ``StateStoreDocDedup.attach_exact``)."""
+        across every handoff; QD always reads one Q1 file per trigger
+        (``StateStoreDocDedup.attach_dedup`` determinism note)."""
         if self._bench_shingles is None:
             # honest, not silenced (r14 verdict #2): without a bench
             # the decontamination stage never runs on this unbounded

@@ -2,10 +2,11 @@
 fuzzy dedup of every document against everything seen so far, with
 membership answered as POINT LOOKUPS against keyed streaming state.
 No trigger scans a seen-corpus index, so per-batch cost stays flat as
-the corpus grows (measured: late/early per-batch wall 1.00 / 0.99 /
-0.82 for the three stages across 1.1M offered docs,
-``scripts/probe_dedup_state_growth.json``). Exactly-once comes from
-each query's offset log plus keyed state and idempotent sinks.
+the corpus grows (measured on the earlier three-query layout: late/early
+per-batch wall 1.00 / 0.99 / 0.82 for its three stages across 1.1M
+offered docs, ``scripts/probe_dedup_state_growth.json``). Exactly-once
+comes from each query's offset log plus keyed state and idempotent
+sinks.
 
 HOW the lookups run matters as much as that they exist. The first cut
 of this engine used ``applyInPandasWithState``; it was semantically
@@ -19,80 +20,67 @@ with native code — and pushes the per-batch keeper arithmetic into
 plain batch DataFrame ops inside ``foreachBatch`` where it is stateless
 and cheap.
 
-Topology — three chained queries (each stage's handoff is either an
-exactly-once streaming file sink or the batch_id-overwrite recipe, so
-the composition stays end-to-end exactly-once):
+Topology — two chained queries; Q1's handoff is a staged atomic-rename
+publish and QD's sink is a batch_id-scoped overwrite, so the
+composition stays end-to-end exactly-once:
 
   Q1 (batch-local keepers, stateless): docs -> fp (NULL-text sentinel,
      the r12 null-identity contract) -> WITHIN the micro-batch: min-id
      keeper per fp, then min-id keeper per MinHash band bucket ->
-     ``<out>/local/batch_id=N``, each row
-     carrying its 27 band keys as a ``bands`` array column (r15): the
-     signature build — the chain's most expensive projection — runs
-     ONCE here and rides Q2's pass-through sink to Q3 as ~220 B/doc of
-     parquet instead of being re-derived from text every Q3 trigger.
-     After this stage a batch never carries two docs sharing a
-     fingerprint or a band bucket — the precondition that makes Q3's
-     native dedup semantics exact.
+     ``<out>/local/batch_id=N``, each row carrying its 27 band keys as
+     a ``bands`` array (r15: the signature build, the chain's most
+     expensive projection, runs ONCE here). After Q1 a batch never
+     carries two docs sharing a fingerprint or a band bucket — the
+     precondition that makes QD's native dedup semantics exact.
 
-  Q2 (exact vs all history): Q1's sink -> ``dropDuplicates(["fp"])``
-     (native streaming state; first arrival across all batches wins,
-     and Q1 made within-batch arrival unique, so "first" is the min-id
-     keeper — deterministically WHEN each Q2 micro-batch contains
-     exactly one Q1 batch; see :meth:`attach_exact`) ->
-     ``<out>/exact/`` file sink.
+  QD (exact + fuzzy vs all history, :meth:`attach_dedup`): Q1's output,
+     ONE FILE PER TRIGGER -> ``dropDuplicates`` on the fp digest (first
+     arrival wins) -> explode ``bands`` into claim rows ->
+     ``dropDuplicates`` on the (band_idx, bh) claim key = BUCKET
+     CLAIMS: a row survives iff its bucket was never claimed in an
+     earlier trigger. foreachBatch assembles: a doc survives iff ALL its
+     claim rows survived, writing ``<out>/corpus/batch_id=N``. The plan
+     is linear with exactly two state operators (a bypass branch split
+     off after the fp dedup and unioned back makes Spark plan that dedup
+     twice). Splitting a Q1 batch across triggers is safe: Q1 leaves no
+     shared fp or band key inside a batch. MERGING two Q1 batches into
+     one trigger is not: near-dups from different batches could split
+     their bucket claims, and then both are dropped.
 
-  Q3 (fuzzy vs all history): Q2's sink -> explode the precomputed
-     ``bands`` array into band rows (band 0 carries the text so the 27x
-     explode ships each text once) -> ``dropDuplicates`` on the
-     two-column (band_idx, bh) claim key (a single-long bit-pack was
-     measured WORSE on live SST bytes and reverted — see
-     :meth:`attach_fuzzy`) = BUCKET CLAIMS:
-     a row survives iff its bucket was never claimed in any earlier
-     batch. foreachBatch assembles: a doc survives iff ALL its band
-     rows survived (any lost claim = near-dup of the existing corpus),
-     writing ``<out>/corpus/batch_id=N``.
+Handoff safety: a rename makes a whole Q1 batch appear in one listing,
+so QD never reads a half-written batch. A Q1 crash-replay re-publishes
+its directory with fresh part-file names; QD's reader sets
+``ignoreMissingFiles`` so a stale source-log reference is skipped
+rather than looping on FileNotFoundException, and the fp state absorbs
+the re-delivered rows. In bounded-horizon mode that absorption is only
+as wide as the horizon: a replay re-delivering rows whose event time
+has already passed watermark + horizon is re-admitted. Crash-replay is
+prompt, so this needs a horizon shorter than the restart-recovery gap
+to bite — a qualification, not a guarantee (r14 advisor finding).
 
-Q1 -> Q2 handoff safety: Q1's foreachBatch is NOT a transactional file
-sink (no ``_spark_metadata``), so each batch directory is written to a
-``_staging`` area and atomically renamed into the listened directory —
-Q2's listing can never observe a half-written batch (no splitting one
-Q1 batch across Q2 triggers). A crash-replay of a Q1 batch deletes and
-re-publishes its directory with fresh part-file names; Q2's reader sets
-``ignoreMissingFiles`` so a source-log reference to a deleted file
-degrades to a skip instead of a FileNotFoundException restart loop, and
-the fp state absorbs the re-delivered rows — exactly-once output holds
-in unbounded mode. In bounded-horizon mode the absorption is only as
-wide as the horizon: ``dropDuplicatesWithinWatermark`` guarantees dedup
-within watermark + horizon, so a replay re-delivering rows whose event
-time has already fallen past that window is re-admitted and can
-duplicate corpus rows. Crash-replay is prompt (the failed trigger
-retries immediately), so this needs a horizon shorter than the
-restart-recovery gap to bite — but it is a qualification, not a
-guarantee (r14 advisor finding).
-
-NULL-text docs and shingle-less docs (NULL band keys) bypass Q3's claim
-state: ``dropDuplicates`` treats NULL as a value, so letting them
-through would collapse every short doc onto one survivor — the r12
-null-identity class. They route straight to the corpus sink.
+NULL-text and shingle-less docs (NULL band keys) cannot claim buckets —
+``dropDuplicates`` treats NULL as a value, so one shared NULL claim
+would collapse every short doc onto one survivor (the r12 null-identity
+class). Each claims ONE per-doc key instead: band index ``BYPASS_BAND``
+(outside 0..LSH_BANDS-1) and the 60-bit ``h60_from_md5_sql`` hash of
+md5(fp), so it survives once it passes the fp stage. Bypass keys
+collide only on a 60-bit hash collision, the assumption every band key
+already makes.
 
 Band-bucket occupancy is FIRST-PRESENTER (a doc that is itself dropped
 still claimed its fresh buckets), so a later near-dup of a dropped doc
 is dropped too — chain dropping, the law Q1 applies within a batch and
-q50's connected-component survivors apply globally. It is
-deterministic, and ``tests/test_dedup_engines_differential.py`` pins it
-doc-for-doc against an exact pure-Python model.
+q50's connected-component survivors apply globally;
+``tests/test_dedup_engines_differential.py`` pins it doc-for-doc
+against an exact pure-Python model.
 
-State sizing: one native state row per distinct fingerprint + one per
-distinct band key (~LSH_BANDS x docs). The default HDFS-backed provider
+State: one row per distinct fingerprint + one per distinct band key
+(~LSH_BANDS x docs), both under QD's checkpoint. The default provider
 holds state on executor heaps — fine to tens of millions of keys; at
 real scale set ``spark.sql.streaming.stateStore.providerClass`` to the
-RocksDB provider (changelog-checkpointed, spills to disk) — a config
-flip, not a code change.
-
-Trade: the band/fingerprint index lives inside the state store, so it
-is not a queryable table, and survivors appear two triggers after
-arrival (three-query pipeline).
+RocksDB provider, a config flip. A checkpoint root written by the
+earlier three-query layout (separate exact and fuzzy queries) does not
+resume under this one. Trade: the index is not a queryable table.
 """
 
 from __future__ import annotations
@@ -106,6 +94,9 @@ from pyspark.sql.streaming import StreamingQuery
 from weather_monitoring_spark.operators.dedup import LSH_BANDS
 
 _DOC_SCHEMA = "doc_id long, text string, fp string"
+# Claim band index of NULL-text and shingle-less docs (module docstring):
+# outside 0..LSH_BANDS-1, so a per-doc key never meets a real band key.
+BYPASS_BAND = LSH_BANDS
 
 
 def _with_fp(docs: DataFrame, extra: tuple = ()) -> DataFrame:
@@ -119,16 +110,16 @@ def _with_fp(docs: DataFrame, extra: tuple = ()) -> DataFrame:
 
 
 def _atomic_promote(spark: SparkSession, staging: str, final: str) -> None:
-    """Atomically publish a finished Q1 batch directory into the
-    directory Q2 listens on. Spark's file-stream source lists FILES; a
-    directory rename makes every part file appear in one listing
-    snapshot, so a batch can never be split across two Q2 triggers. On
+    """Atomically publish a finished batch directory into the directory
+    a downstream file-stream query listens on. Spark's file-stream
+    source lists FILES; a directory rename makes every part file appear
+    in one listing snapshot, so no listing sees a half-written batch. On
     crash-replay the previous attempt's directory is deleted first —
-    Q2's ``ignoreMissingFiles`` reader option (set in
-    :meth:`StateStoreDocDedup.attach_exact`) turns any dangling
+    the dedup query's ``ignoreMissingFiles`` reader option (set in
+    :meth:`StateStoreDocDedup.attach_dedup`) turns any dangling
     source-log reference into a skip, and the fp state absorbs the
     re-delivered rows (within the horizon in bounded mode — see the
-    module header's Q1 -> Q2 handoff-safety qualification). Uses the
+    module header's Q1 -> QD handoff-safety qualification). Uses the
     Hadoop FileSystem API so the same code holds on
     HDFS/object-store-with-rename, not just local paths."""
     jvm = spark._jvm
@@ -162,8 +153,8 @@ def _with_band_array(texted: DataFrame, extra: tuple = ()) -> DataFrame:
     timestamp in bounded-horizon mode).
 
     The array form exists so Q1 can compute the signatures ONCE and
-    ship them through Q2's sink to Q3 as 27 int64 cells per doc
-    (~220 B) — before r15, Q3 re-derived the full tokenize -> shingle ->
+    ship them to the dedup query as 27 int64 cells per doc (~220 B) —
+    before r15, the claim stage re-derived the full tokenize -> shingle ->
     minhash -> band chain from text, paying the engine's most expensive
     projection twice per doc and re-analyzing its expression forest
     every trigger (the composed-probe decomposition)."""
@@ -211,35 +202,47 @@ def _with_band_array(texted: DataFrame, extra: tuple = ()) -> DataFrame:
     )
 
 
-def _explode_bands(banded: DataFrame, extra: tuple = ()) -> DataFrame:
+def _claim_rows(banded: DataFrame, extra: tuple = ()) -> DataFrame:
     """``_with_band_array`` rows -> (doc_id, text, fp, *extra, band_idx,
-    bh). Keys stay the exact two-column (band_idx, bh) form the parquet
-    engine uses — NOT bit-packed into one long (60-bit hash + 27 bands
-    needs 5 index bits = 65 > 64; a 4-bit pack aliased bands 16-26 onto
-    0-10). Text rides band 0 only — the explode must not ship each text
-    LSH_BANDS times."""
+    bh) bucket-claim rows. Keys stay the exact two-column (band_idx, bh)
+    form — NOT bit-packed into one long (60-bit hash + 27 bands needs 5
+    index bits = 65 > 64; a 4-bit pack aliased bands 16-26 onto 0-10).
+    A NULL-text or shingle-less doc gets ONE claim row
+    (``BYPASS_BAND``, 60-bit hash of md5(fp)) instead of its NULL band
+    keys. Text rides the first row only — the explode must not ship
+    each text LSH_BANDS times."""
+    from weather_monitoring_spark.functions.text import h60_from_md5_sql
+
+    bypass = F.col("bands")[0].isNull()  # NULL text -> NULL bands too
+    keys = F.when(
+        bypass, F.array(F.expr(h60_from_md5_sql("md5(fp)")))
+    ).otherwise(F.col("bands"))
     return banded.select(
         "doc_id",
         "text",
         "fp",
         *extra,
-        F.posexplode("bands").alias("band_idx", "bh"),
+        bypass.alias("_bypass"),
+        F.posexplode(keys).alias("_pos", "bh"),
     ).select(
         "doc_id",
-        F.when(F.col("band_idx") == 0, F.col("text")).alias("text"),
+        F.when(F.col("_pos") == 0, F.col("text")).alias("text"),
         "fp",
         *extra,
-        "band_idx",
+        F.when(F.col("_bypass"), F.lit(BYPASS_BAND))
+        .otherwise(F.col("_pos"))
+        .alias("band_idx"),
         "bh",
     )
 
 
-def _band_rows(texted: DataFrame, extra: tuple = ()) -> DataFrame:
-    """(doc_id, text-on-band-0, fp, *extra, band_idx, bh) — the exploded
-    band view derived from text (``_with_band_array`` + ``_explode_bands``;
-    kept as the one-call form the differential tests and standalone
-    callers use)."""
-    return _explode_bands(_with_band_array(texted, extra), extra)
+def _band_rows(texted: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, bh): one row per MinHash band derived from text
+    (NULL bh for shingle-less docs) — the band view the differential
+    tests model."""
+    return _with_band_array(texted).select(
+        "doc_id", F.posexplode("bands").alias("band_idx", "bh")
+    )
 
 
 class StateStoreDocDedup:
@@ -248,7 +251,7 @@ class StateStoreDocDedup:
     ``dedup_horizon`` (r14): bounded-horizon mode. By default the
     fingerprint/claim state is UNBOUNDED — a duplicate is a duplicate
     forever, one state row per distinct key for the life of the stream.
-    Passing a horizon (e.g. ``"7 days"``) switches Q2/Q3 to
+    Passing a horizon (e.g. ``"7 days"``) switches both dedup stages to
     ``withWatermark(ts, horizon) + dropDuplicatesWithinWatermark``:
     state rows EXPIRE once the watermark passes their event time +
     horizon, so total state is bounded by the horizon's key arrival
@@ -267,15 +270,14 @@ class StateStoreDocDedup:
     ) -> None:
         self.spark = spark
         self.local_dir = os.path.join(out_dir, "local")
-        self.exact_dir = os.path.join(out_dir, "exact")
         self.corpus_dir = os.path.join(out_dir, "corpus")
         self.horizon = dedup_horizon
         self.ts_col = event_time_col if dedup_horizon else None
         self._extra = (self.ts_col,) if self.ts_col else ()
-        # Q1's batches (and Q2's pass-through sink) carry the MinHash
-        # band keys as an array column so Q3 never re-derives them from
-        # text (_with_band_array docstring). ~220 B/doc of parquet for
-        # one fewer full signature build + a trivially smaller Q3 plan.
+        # Q1's batches carry the MinHash band keys as an array column so
+        # the dedup query never re-derives them from text
+        # (_with_band_array docstring). ~220 B/doc of parquet for one
+        # fewer full signature build + a trivially smaller claim plan.
         self._schema = (
             _DOC_SCHEMA
             + ", bands array<bigint>"
@@ -332,7 +334,7 @@ class StateStoreDocDedup:
         fresh = hashed.join(w_min, ["fp", "doc_id"], "left_semi")
         # Bands computed HERE, once, and shipped downstream as an
         # array column (``_with_band_array`` docstring): the keeper
-        # arithmetic below and Q3's claim explode both consume this
+        # arithmetic below and the dedup query's claims both consume this
         # derivation. NULL-safe, so no text filter needed — NULL
         # text yields NULL bands, and the explode's bh-NULL filter
         # keeps those rows out of the keeper math. Pinned EAGERLY: the
@@ -367,7 +369,7 @@ class StateStoreDocDedup:
         if output_files_per_batch:
             out = out.coalesce(output_files_per_batch)
         # Stage, then atomically rename into the listened directory
-        # (see _atomic_promote): Q2 must never list a half-written
+        # (see _atomic_promote): QD must never list a half-written
         # batch, and a replay must not strand dangling file refs.
         staging = os.path.join(
             self.local_dir, "_staging", f"batch_id={batch_id}"
@@ -401,49 +403,47 @@ class StateStoreDocDedup:
             .start()
         )
 
-    # ------------------- Q2: exact dedup vs all history ---------------------
+    # ------------- QD: exact + fuzzy dedup vs all history --------------
 
-    def attach_exact(
+    def attach_dedup(
         self,
         checkpoint_dir: str,
         trigger: dict | None = None,
-        max_files_per_trigger: int | None = None,
         output_files_per_batch: int | None = None,
     ) -> StreamingQuery:
-        """``output_files_per_batch`` coalesces the survivor sink (one
-        file per batch keeps Q3's batch granularity 1:1 — useful for
-        audit/probing; leave None to parallelize at scale);
-        ``max_files_per_trigger`` is the standard source-bounding knob.
+        """The one stateful dedup query (module docstring, QD).
 
-        Determinism note: ``dropDuplicates(["fp"])`` keeps the FIRST
-        arrival, and Q1 made within-batch arrival unique — so "first"
-        is the min-id keeper exactly when each Q2 micro-batch contains
-        exactly one Q1 batch (``max_files_per_trigger`` = Q1's
-        ``output_files_per_batch``, both 1 in the probes/tests). On
-        catch-up after downtime or with a wider trigger, several Q1
-        batches merge into one micro-batch and ``dropDuplicates`` keeps
-        an ARBITRARY same-fp row: the dedup SET stays correct, only the
-        keeper's identity becomes nondeterministic. Enforce the 1:1
-        pairing when deterministic keeper identity matters."""
+        ``output_files_per_batch`` coalesces each published corpus
+        batch directory — REQUIRED (as 1) whenever a downstream
+        file-stream consumer bounds its triggers with
+        ``maxFilesPerTrigger=1`` and expects one trigger per corpus
+        batch: without it the assembler's aggregate writes one file per
+        shuffle partition and the consumer splinters each batch into
+        that many triggers (the composed probe measured the shard stage
+        running 97 triggers for 25 corpus batches, ~4x its per-batch
+        fixed overhead, before r15 added this knob).
+
+        Determinism note: the source reads one Q1 file per trigger, so
+        no trigger holds two Q1 batches, and Q1 made within-batch keys
+        unique — each key's first arrival is well defined, also on
+        catch-up after downtime. Pass ``output_files_per_batch=1`` to
+        Q1 to keep one trigger per Q1 batch."""
         trig = trigger or {"processingTime": "10 seconds"}
+        extra = self._extra
         # the batch_id=N delta dirs read as a partition column — declare
         # it so the source schema assertion holds, then drop it.
         # ignoreMissingFiles: a Q1 crash-replay re-publishes its batch
         # directory with fresh part-file names (_atomic_promote); any
         # stale source-log reference must skip, not loop on FNFE.
-        reader = (
+        local = (
             self.spark.readStream.schema(self._schema + ", batch_id long")
             .option("basePath", self.local_dir)
             .option("ignoreMissingFiles", "true")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(os.path.join(self.local_dir, "batch_id=*"))
+            .select("doc_id", "text", "fp", "bands", *extra)
         )
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        local = reader.parquet(
-            os.path.join(self.local_dir, "batch_id=*")
-        ).select("doc_id", "text", "fp", "bands", *self._extra)
-        # native streaming state: first arrival of each fp wins; Q1 made
-        # within-batch arrival unique, so "first" IS the min-id keeper.
-        # The state KEY is the 16-byte binary digest, not the 32-char
+        # The fp state KEY is the 16-byte binary digest, not the 32-char
         # hex string (r14 verdict #3: the fp state measured 39.1 B/row
         # live SST, over a third of it hex-encoding overhead) — unhex
         # is injective on the md5 hex alphabet and the NULL-text
@@ -454,63 +454,19 @@ class StateStoreDocDedup:
             "_fpk",
             F.coalesce(F.unhex(F.col("fp")), F.unhex(F.md5(F.col("fp")))),
         )
-        # Bounded-horizon mode swaps in dropDuplicatesWithinWatermark:
-        # same first-wins law, but the fp state row expires once the
-        # watermark passes its event time + horizon.
+        # Bounded-horizon mode: same first-wins law, but a state row of
+        # either operator expires once the one watermark passes its
+        # event time + horizon.
         if self.horizon:
-            survivors = keyed.withWatermark(
-                self.ts_col, self.horizon
-            ).dropDuplicatesWithinWatermark(["_fpk"])
-        else:
-            survivors = keyed.dropDuplicates(["_fpk"])
-        survivors = survivors.drop("_fpk")
-        if output_files_per_batch:
-            survivors = survivors.coalesce(output_files_per_batch)
-        return (
-            survivors.writeStream.format("parquet")
-            .option("path", self.exact_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(**trig)
-            .start()
-        )
+            keyed = keyed.withWatermark(self.ts_col, self.horizon)
 
-    # ------------------- Q3: fuzzy dedup vs all history ---------------------
+        def first_wins(df: DataFrame, keys: list) -> DataFrame:
+            if self.horizon:
+                return df.dropDuplicatesWithinWatermark(keys)
+            return df.dropDuplicates(keys)
 
-    def attach_fuzzy(
-        self,
-        checkpoint_dir: str,
-        trigger: dict | None = None,
-        max_files_per_trigger: int | None = None,
-        output_files_per_batch: int | None = None,
-    ) -> StreamingQuery:
-        """``output_files_per_batch`` coalesces each published corpus
-        batch directory — REQUIRED (as 1) whenever a downstream
-        file-stream consumer bounds its triggers with
-        ``maxFilesPerTrigger=1`` and expects one trigger per corpus
-        batch: without it the assembler's aggregate writes one file per
-        shuffle partition and the consumer splinters each batch into
-        that many triggers (the composed probe measured the shard stage
-        running 97 triggers for 25 corpus batches, ~4x its per-batch
-        fixed overhead, before r15 added this knob)."""
-        trig = trigger or {"processingTime": "10 seconds"}
-        extra = self._extra
-        reader = self.spark.readStream.schema(self._schema)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        exact = reader.parquet(self.exact_dir)
-        # Bands arrive precomputed from Q1 through Q2's sink — explode
-        # the stored array instead of re-deriving signatures from text
-        # (the pre-r15 form; _with_band_array docstring).
-        bands = _explode_bands(exact.filter(F.col("text").isNotNull()), extra)
-        # BUCKET CLAIMS, natively stateful: a band row survives iff its
-        # key was never presented in any earlier batch. Q1 guarantees at
-        # most one doc per key per batch, so claims are never split
-        # between same-batch near-dups. Bounded-horizon mode: a claim
-        # expires with the watermark, so a near-dup of content older
-        # than the horizon is re-admitted (matching the fp stage).
-        #
-        # State KEY: the two-column (band_idx, bh) form — MEASURED
+        fresh = first_wins(keyed, ["_fpk"]).drop("_fpk")
+        # Claim state KEY: the two-column (band_idx, bh) form — MEASURED
         # better than the r15-opening single-long pack
         # (shiftleft(shiftright(bh,1),5)|band_idx), which was reverted
         # on instruments: the pack shrinks the raw UnsafeRow key 24->16
@@ -522,50 +478,25 @@ class StateStoreDocDedup:
         # prefix locality beats raw key width ~25% at scale). The fp
         # stage keeps its unhex key — there the 16-byte digest IS the
         # entropy and measured 39.1 -> 28.2 B/row.
-        unexpired = bands.filter(F.col("bh").isNotNull())
-        if self.horizon:
-            claims = unexpired.withWatermark(
-                self.ts_col, self.horizon
-            ).dropDuplicatesWithinWatermark(["band_idx", "bh"])
-        else:
-            claims = unexpired.dropDuplicates(["band_idx", "bh"])
-        # UNKNOWN-content rows bypass the claim state: NULL text (no
-        # content to be near) and shingle-less docs (NULL band keys —
-        # one shared NULL "claim" would collapse every short doc, the
-        # r12 null-identity class). Marked with the full claim count so
-        # the assembler keeps them unconditionally.
-        nulltext = exact.filter(F.col("text").isNull()).select(
-            "doc_id", "text", "fp", *extra
-        )
-        shingleless = bands.filter(
-            F.col("bh").isNull() & (F.col("band_idx") == 0)
-        ).select("doc_id", "text", "fp", *extra)
-        bypass = nulltext.unionByName(shingleless).select(
-            "doc_id",
-            "text",
-            "fp",
-            *extra,
-            F.lit(0).alias("band_idx"),
-            F.lit(None).cast("long").alias("bh"),
-            F.lit(True).alias("bypass"),
-        )
-        merged = claims.withColumn("bypass", F.lit(False)).unionByName(bypass)
+        claims = first_wins(_claim_rows(fresh, extra), ["band_idx", "bh"])
         corpus_dir = self.corpus_dir
-        n_bands = LSH_BANDS
         n_files = output_files_per_batch
 
         def assemble(batch_df: DataFrame, batch_id: int) -> None:
+            # a doc survives iff every claim it presented survived: all
+            # LSH_BANDS band claims, or its one bypass claim
             surv = (
                 batch_df.groupBy("doc_id")
                 .agg(
                     F.count(F.lit(1)).alias("_claims"),
+                    F.max("band_idx").alias("_band"),
                     F.max("text").alias("text"),
                     F.max("fp").alias("fp"),
                     *[F.max(c).alias(c) for c in extra],
-                    F.max(F.col("bypass").cast("int")).alias("_bypass"),
                 )
                 .filter(
-                    (F.col("_bypass") == 1) | (F.col("_claims") == n_bands)
+                    (F.col("_claims") == LSH_BANDS)
+                    | (F.col("_band") == BYPASS_BAND)
                 )
                 .select("doc_id", "text", "fp", *extra)
             )
@@ -585,7 +516,7 @@ class StateStoreDocDedup:
             )
 
         return (
-            merged.writeStream.foreachBatch(assemble)
+            claims.writeStream.foreachBatch(assemble)
             .option("checkpointLocation", checkpoint_dir)
             .outputMode("append")
             .trigger(**trig)
@@ -598,27 +529,21 @@ class StateStoreDocDedup:
         checkpoint_root: str,
         trigger: dict | None = None,
         output_files_per_batch: int | None = None,
-        fuzzy_max_files_per_trigger: int | None = None,
-    ) -> tuple[StreamingQuery, StreamingQuery, StreamingQuery]:
+    ) -> tuple[StreamingQuery, StreamingQuery]:
+        """Start (Q1, QD) under ``<checkpoint_root>/local`` and
+        ``<checkpoint_root>/dedup``."""
         q1 = self.attach_local(
             doc_stream,
             os.path.join(checkpoint_root, "local"),
             trigger,
             output_files_per_batch,
         )
-        q2 = self.attach_exact(
-            os.path.join(checkpoint_root, "exact"),
+        qd = self.attach_dedup(
+            os.path.join(checkpoint_root, "dedup"),
             trigger,
-            max_files_per_trigger=fuzzy_max_files_per_trigger,
-            output_files_per_batch=output_files_per_batch,
+            output_files_per_batch,
         )
-        q3 = self.attach_fuzzy(
-            os.path.join(checkpoint_root, "fuzzy"),
-            trigger,
-            max_files_per_trigger=fuzzy_max_files_per_trigger,
-            output_files_per_batch=output_files_per_batch,
-        )
-        return q1, q2, q3
+        return q1, qd
 
     def corpus(self) -> DataFrame:
         return (

@@ -24,12 +24,33 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from weather_monitoring_spark.operators.core import latest_per_key
+
+
+def swap_view(view_dir: str, write: Callable[[str, bool], bool]) -> None:
+    """Crash-safe replace of a small view directory: ``write(tmp,
+    exists)`` writes the next view into ``tmp`` (merging from the view
+    when it ``exists``) or returns False to keep it. A crash between
+    the two renames below leaves only ``<view>.old``; it is moved back
+    first, so a replayed batch merges into the full view."""
+    old = view_dir + ".old"
+    if not os.path.exists(view_dir) and os.path.exists(old):
+        os.rename(old, view_dir)
+    tmp = view_dir + ".tmp"
+    if not write(tmp, os.path.exists(view_dir)):
+        return
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    if os.path.exists(view_dir):
+        os.rename(view_dir, old)
+    os.rename(tmp, view_dir)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 class LatestView:
@@ -88,26 +109,21 @@ class LatestView:
         a batch against a view that already absorbed it is a no-op.
         """
         batch_latest = latest_per_key(batch_df, self.key_cols, self.seq_col)
-        if os.path.exists(self.view_dir):
-            current = self.spark.read.parquet(self.view_dir)
-            merged = latest_per_key(
-                current.unionByName(batch_latest), self.key_cols, self.seq_col
-            )
-        else:
+
+        def write(tmp: str, exists: bool) -> bool:
             merged = batch_latest
-        tmp = self.view_dir + ".tmp"
-        # The view is O(distinct keys): coalesce(1) keeps it a single file
-        # (this is the serving copy, not the archive — the archive holds
-        # the full history at full parallelism).
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = self.view_dir + ".old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(self.view_dir):
-            os.rename(self.view_dir, old)
-        os.rename(tmp, self.view_dir)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+            if exists:
+                current = self.spark.read.parquet(self.view_dir)
+                merged = latest_per_key(
+                    current.unionByName(merged), self.key_cols, self.seq_col
+                )
+            # The view is O(distinct keys): coalesce(1) keeps it a single
+            # file (this is the serving copy, not the archive — the
+            # archive holds the full history at full parallelism).
+            merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+            return True
+
+        swap_view(self.view_dir, write)
 
     def attach(
         self,

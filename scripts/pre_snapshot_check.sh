@@ -4,7 +4,8 @@
 # milestone commit; nonzero exit means DO NOT COMMIT.
 #
 # Checks (cheap-first; ~15 s total, no Spark session needed for 1-2):
-#   1. The package imports and the query registry resolves all entries.
+#   1. Every module in the package imports and the query registry
+#      resolves all entries.
 #   2. pytest can collect every test file (catches ImportError-at-
 #      collection, the exact r8 failure mode).
 #   3. __spark_entry__ exposes entry/queries/oracle_sql with matching keys.
@@ -17,9 +18,19 @@ set -u
 cd "$(dirname "$0")/.."
 fail=0
 
-echo "[1/3] package import + registry resolution"
+echo "[1/3] every module imports + registry resolution"
 python - <<'EOF' || fail=1
-import weather_monitoring_spark.operators  # the r8 ImportError site
+import importlib
+import pkgutil
+
+import weather_monitoring_spark as pkg
+
+# Package __init__ files import nothing, so an ImportError in any one
+# module (the r8 failure) only shows when that module itself is imported.
+mods = [m.name for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")]
+for name in mods:
+    importlib.import_module(name)
+print(f"  ok: {len(mods)} modules import")
 from weather_monitoring_spark.plans.registry import all_queries
 n = len(all_queries())
 assert n >= 50, f"registry shrank: {n} < 50"

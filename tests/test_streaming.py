@@ -122,7 +122,19 @@ def test_latest_view_merge_and_replay(spark, tmp_path):
     v1 = view.get_all()
     assert v1.count() == v1.select("station_id").distinct().count()
 
-    view.merge_batch(b2)
+    # a merge into an existing view runs two Spark jobs: the view is read
+    # with the batch's schema (no inference job) and view ∪ batch is
+    # reduced once (one shuffle-map job, one write job)
+    sc = spark.sparkContext
+    sc.setJobGroup("view-merge", "view-merge")
+    try:
+        view.merge_batch(b2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed by it
+    assert len(sc.statusTracker().getJobIdsForGroup("view-merge")) == 2
+
     v2 = view.get_all().cache()
     expected = (
         wire.groupBy("station_id").agg(F.max("s_no").alias("s_no"))
@@ -130,20 +142,21 @@ def test_latest_view_merge_and_replay(spark, tmp_path):
     got = v2.select("station_id", "s_no")
     assert got.exceptAll(expected).count() == 0 and expected.exceptAll(got).count() == 0
 
-    # replay b2 (at-least-once channel) -> view unchanged (idempotent merge)
-    view.merge_batch(b2)
-    v3 = view.get_all().select("station_id", "s_no")
-    assert v3.exceptAll(got).count() == 0 and got.exceptAll(v3).count() == 0
-
     # point lookup serves exactly one row
     some_id = v2.select("station_id").first()[0]
     assert view.get(station_id=some_id).count() == 1
     v2.unpersist()
 
+    # replay b2 (at-least-once channel) -> view unchanged (idempotent
+    # merge). The views below are read after v2.unpersist() and compared
+    # with `expected`: while v2 is persisted, a read of the view path is
+    # served from v2's cache, not from the merged files.
+    view.merge_batch(b2)
+    v3 = view.get_all().select("station_id", "s_no")
+    assert v3.exceptAll(expected).count() == 0 and expected.exceptAll(v3).count() == 0
+
     # crash between the swap's two renames leaves only <view>.old; the
     # replayed batch must merge into the full view, not an empty one
-    # (compared with `expected`: a read of the view path would hit v2's
-    # cache while it is persisted)
     os.rename(view.view_dir, view.view_dir + ".old")
     view.merge_batch(b1)
     v4 = view.get_all().select("station_id", "s_no")

@@ -1,3 +1,1 @@
-from weather_monitoring_spark.functions.exact import davg, dsum, o_davg, o_dsum
-
-__all__ = ["davg", "dsum", "o_davg", "o_dsum"]
+"""Spark column functions, one family per submodule; import the submodule you use."""

@@ -1,192 +1,1 @@
-from weather_monitoring_spark.operators.core import (
-    dedup_by_key,
-    latest_per_key,
-    normalize_wire,
-    point_lookup,
-    sequence_gaps,
-    split_valid_rejects,
-    top_k,
-    with_partition_cols,
-)
-from weather_monitoring_spark.operators.dedup import (
-    dup_source_matrix,
-    exact_dedup,
-    minhash_lsh_pairs,
-    minhash_signatures,
-    ngram_jaccard_pairs,
-    ngram_jaccard_verify,
-    shingle_df_cutoff,
-    simhash_neardup_pairs,
-    simhash_signatures,
-)
-from weather_monitoring_spark.operators.multimodal import (
-    chunk_audio,
-    decode_images,
-    resize_images,
-    sample_frames,
-    synthetic_assets,
-)
-from weather_monitoring_spark.operators.embeddings import (
-    quantize_embeddings,
-    reduce_embeddings,
-)
-from weather_monitoring_spark.operators.lines import (
-    dedup_lines,
-    line_doc_freq,
-    strip_boilerplate,
-)
-from weather_monitoring_spark.operators.profile import histogram, profile_table
-from weather_monitoring_spark.operators.quality import (
-    blocklist_filter,
-    compression_signals,
-    curate_corpus,
-    pii_redaction,
-    quality_annotations,
-    repetition_signals,
-)
-from weather_monitoring_spark.operators.training_prep import (
-    cap_per_group,
-    chunk_documents,
-    contamination_flags,
-    distributed_cumsum,
-    mixture_weights,
-    pack_token_budget,
-    sample_exact_k,
-    trim_distribution_tails,
-)
-from weather_monitoring_spark.operators.similarity import (
-    ann_lsh_topk,
-    cosine_neardup_lsh,
-    cosine_neardup_pairs,
-    cosine_topk,
-    ivf_append_index,
-    ivf_pq_topk,
-    ivf_probe_index,
-    ivf_reindex,
-    ivf_topk,
-    ivf_train,
-    ivf_write_index,
-    with_lsh_buckets,
-)
-from weather_monitoring_spark.operators.clustering import (
-    cluster_balanced_sample,
-    kmeans_assign,
-    kmeans_embeddings,
-    kmeans_train,
-    semdedup_pairs,
-    semdedup_survivors,
-)
-from weather_monitoring_spark.operators.spans import (
-    dup_spans,
-    duplicated_grams,
-    strip_dup_spans,
-)
-from weather_monitoring_spark.operators.winnow import (
-    contamination_spans,
-    dedup_against_index,
-    fingerprint_index,
-    winnow_contamination,
-    winnow_fingerprints,
-    winnow_matches,
-)
-from weather_monitoring_spark.operators.textops import (
-    bigram_lm,
-    lm_score,
-    corpus_report,
-    fingerprints,
-    lang_id,
-    normalize_text,
-    text_stats,
-    tfidf_topk,
-    token_counts,
-)
-from weather_monitoring_spark.operators.versioning import (
-    changed_slice,
-    diff_summary,
-    snapshot_diff,
-)
-
-__all__ = [
-    "ann_lsh_topk",
-    "bigram_lm",
-    "blocklist_filter",
-    "cap_per_group",
-    "changed_slice",
-    "chunk_audio",
-    "chunk_documents",
-    "cluster_balanced_sample",
-    "compression_signals",
-    "contamination_flags",
-    "contamination_spans",
-    "corpus_report",
-    "cosine_neardup_lsh",
-    "cosine_neardup_pairs",
-    "cosine_topk",
-    "curate_corpus",
-    "decode_images",
-    "dedup_against_index",
-    "dedup_by_key",
-    "dedup_lines",
-    "diff_summary",
-    "distributed_cumsum",
-    "dup_source_matrix",
-    "dup_spans",
-    "duplicated_grams",
-    "exact_dedup",
-    "fingerprint_index",
-    "fingerprints",
-    "histogram",
-    "ivf_append_index",
-    "ivf_pq_topk",
-    "ivf_probe_index",
-    "ivf_reindex",
-    "ivf_topk",
-    "ivf_train",
-    "ivf_write_index",
-    "kmeans_assign",
-    "kmeans_embeddings",
-    "kmeans_train",
-    "lang_id",
-    "latest_per_key",
-    "line_doc_freq",
-    "lm_score",
-    "minhash_lsh_pairs",
-    "minhash_signatures",
-    "mixture_weights",
-    "ngram_jaccard_pairs",
-    "ngram_jaccard_verify",
-    "normalize_text",
-    "normalize_wire",
-    "pack_token_budget",
-    "pii_redaction",
-    "point_lookup",
-    "profile_table",
-    "quality_annotations",
-    "quantize_embeddings",
-    "reduce_embeddings",
-    "repetition_signals",
-    "resize_images",
-    "sample_exact_k",
-    "sample_frames",
-    "semdedup_pairs",
-    "semdedup_survivors",
-    "sequence_gaps",
-    "shingle_df_cutoff",
-    "simhash_neardup_pairs",
-    "simhash_signatures",
-    "snapshot_diff",
-    "split_valid_rejects",
-    "strip_boilerplate",
-    "strip_dup_spans",
-    "synthetic_assets",
-    "text_stats",
-    "tfidf_topk",
-    "token_counts",
-    "top_k",
-    "trim_distribution_tails",
-    "winnow_contamination",
-    "winnow_fingerprints",
-    "winnow_matches",
-    "with_lsh_buckets",
-    "with_partition_cols",
-]
+"""Batch operators, one family per submodule; import the submodule you use."""

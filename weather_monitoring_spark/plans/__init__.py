@@ -1,3 +1,1 @@
-from weather_monitoring_spark.plans.registry import REGISTRY, QuerySpec, all_queries, query
-
-__all__ = ["REGISTRY", "QuerySpec", "all_queries", "query"]
+"""The declared query registry (``registry.all_queries``) and its query modules."""

@@ -1,3 +1,1 @@
-from weather_monitoring_spark.storage.bucketing import write_bucketed
-
-__all__ = ["write_bucketed"]
+"""Bucketed table writes (``bucketing``)."""

@@ -16,9 +16,11 @@ data and marker commit together. A sibling meta file updated after the
 swap would leave a window where a crash yields a view that already
 absorbed the batch with a stale id, double-counting on replay.
 
-Merge math: each batch reduces to partial (cnt, sum) per group —
-commutative + associative, so merging partials into the view is one
-small aggregation over (view ∪ batch-partials). The view's size is
+Merge math: each batch row enters as a one-row partial (cnt = 1, sum =
+its temperature) in the view's schema; (cnt, sum, max, min) are
+commutative + associative, so view ∪ batch rows reduce in one
+aggregation, and the view is read with that known schema (no inference
+job): two Spark jobs per merge into an existing view. The view's size is
 bounded by group cardinality (stations x hours), not stream volume;
 min/max are monotone under append-only input so they merge exactly.
 Averages are derived (sum/cnt) at read time, never stored.
@@ -38,12 +40,16 @@ from weather_monitoring_spark.streaming.latest_view import swap_view
 GROUP_COLS = ["station_id", "date", "hour"]
 
 
-def _batch_partials(batch_df: DataFrame) -> DataFrame:
-    return batch_df.groupBy(*GROUP_COLS).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum(F.col("weather.temperature").cast("decimal(18,2)")).alias("sum_temperature"),
-        F.max("weather.wind_speed").alias("max_wind_speed"),
-        F.min("weather.humidity").alias("min_humidity"),
+def _row_partials(batch_df: DataFrame) -> DataFrame:
+    """Each row as a one-row partial in the view's schema. decimal(38,2)
+    is what a sum of decimal(38,2) yields, so the schema is the same
+    before and after a merge."""
+    return batch_df.select(
+        *GROUP_COLS,
+        F.lit(1).cast("long").alias("cnt"),
+        F.col("weather.temperature").cast("decimal(38,2)").alias("sum_temperature"),
+        F.col("weather.wind_speed").alias("max_wind_speed"),
+        F.col("weather.humidity").alias("min_humidity"),
     )
 
 
@@ -86,19 +92,16 @@ class ContinuousRollup:
         def write(tmp: str, exists: bool) -> bool:
             if batch_id <= self._last_applied():
                 return False  # replayed batch: already absorbed
-            merged = _batch_partials(batch_df)
+            rows = _row_partials(batch_df)
             if exists:
-                merged = (
-                    self.spark.read.parquet(self.view_dir)
-                    .unionByName(merged)
-                    .groupBy(*GROUP_COLS)
-                    .agg(
-                        F.sum("cnt").alias("cnt"),
-                        F.sum("sum_temperature").alias("sum_temperature"),
-                        F.max("max_wind_speed").alias("max_wind_speed"),
-                        F.min("min_humidity").alias("min_humidity"),
-                    )
-                )
+                current = self.spark.read.schema(rows.schema).parquet(self.view_dir)
+                rows = current.unionByName(rows)
+            merged = rows.groupBy(*GROUP_COLS).agg(
+                F.sum("cnt").alias("cnt"),
+                F.sum("sum_temperature").alias("sum_temperature"),
+                F.max("max_wind_speed").alias("max_wind_speed"),
+                F.min("min_humidity").alias("min_humidity"),
+            )
             merged.coalesce(1).write.mode("overwrite").parquet(tmp)
             # Commit marker INSIDE tmp before the swap: the view rename is
             # the commit point for data + batch id together.

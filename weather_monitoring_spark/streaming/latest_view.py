@@ -11,9 +11,9 @@ BitCask semantics (``Base-Central-Station/src/main/java/org/example/BitCask.java
   equivalent is the per-batch overwrite of the (tiny) view table itself:
   the view IS always compacted; there is no log to reclaim.
 
-Design: ``foreachBatch`` merge. Each micro-batch reduces to one row per
-key (``max_by``), unions with the current view, reduces again, and
-atomically replaces the view parquet. The view has one row per station —
+Design: ``foreachBatch`` merge. Each micro-batch unions with the current
+view, reduces to one row per key (``max_by``), and atomically replaces
+the view parquet. The view has one row per station —
 tiny forever (cardinality-bounded, not volume-bounded) — so the rewrite
 is O(keys), not O(stream). Crash mid-rewrite is handled by writing to a
 temp dir and renaming, plus checkpointed micro-batch replay (idempotent:
@@ -103,20 +103,22 @@ class LatestView:
     # -- writes -----------------------------------------------------------
 
     def merge_batch(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
-        """Reduce the batch, merge with the current view, atomically swap.
+        """Reduce view ∪ batch to one row per key, atomically swap.
+
+        The view has the batch's schema, so it is read with that schema
+        (no inference job), and one ``latest_per_key`` over the union
+        does the batch's reduction and the merge in one shuffle: two
+        Spark jobs per merge into an existing view.
 
         max_by merge is idempotent under micro-batch replay (T7): replaying
         a batch against a view that already absorbed it is a no-op.
         """
-        batch_latest = latest_per_key(batch_df, self.key_cols, self.seq_col)
-
         def write(tmp: str, exists: bool) -> bool:
-            merged = batch_latest
+            rows = batch_df
             if exists:
-                current = self.spark.read.parquet(self.view_dir)
-                merged = latest_per_key(
-                    current.unionByName(merged), self.key_cols, self.seq_col
-                )
+                current = self.spark.read.schema(batch_df.schema).parquet(self.view_dir)
+                rows = current.unionByName(batch_df)
+            merged = latest_per_key(rows, self.key_cols, self.seq_col)
             # The view is O(distinct keys): coalesce(1) keeps it a single
             # file (this is the serving copy, not the archive — the
             # archive holds the full history at full parallelism).

@@ -67,8 +67,7 @@ def main() -> None:
     pinned = docs.localCheckpoint(eager=True)
     with warnings.catch_warnings():
         warnings.filterwarnings("ignore", message=".*decontamination.*")
-        st = curate_crawl(pinned, bench=None, min_tokens=5,
-                          checkpoint="gates", gates_only=True)
+        st = curate_crawl(pinned, bench=None, min_tokens=5, gates_only=True)
     warm_out = st.curated.select("doc_id", "text").localCheckpoint(eager=True)
     dd.local_batch(warm_out, 0, 1)
 
@@ -82,7 +81,7 @@ def main() -> None:
         with warnings.catch_warnings():
             warnings.filterwarnings("ignore", message=".*decontamination.*")
             st = curate_crawl(pinned, bench=None, min_tokens=5,
-                              checkpoint="gates", gates_only=True)
+                              gates_only=True)
         gate_df = st.curated.select("doc_id", "text")
         rec("gate_chain_build", time.perf_counter() - t)
 

@@ -2,10 +2,10 @@
 curation chain (VERDICT r14 #6): the e2e probe ran the whole chain in
 lockstep (every stage saw exactly one upstream batch per trigger); a
 real feed arrives BURSTY and a restarted consumer starts LAGGED. This
-probe delivers the full corpus to the gate stage first, then starts
-Q1, QD and QS cold — Q1's first trigger merges MANY gate batches
-(arrival-ordered keepers, ``StateStoreDocDedup.local_batch``
-``arrival_col``), and QD reads Q1's output one file per trigger
+probe delivers the full corpus to the gate stage first (which runs the
+batch-local keepers inside its own trigger, one segment per trigger),
+then starts QD and QS cold against the whole backlog of local batches
+— QD reads them one file per trigger
 (``StateStoreDocDedup.attach_dedup`` determinism note), so catch-up
 must keep the lockstep survivors.
 
@@ -108,8 +108,9 @@ def main() -> None:
     gates_wall = time.time() - t0
 
     # ---- phase 2: downstream starts COLD against the full backlog.
-    # No maxFilesPerTrigger bound -> each stage's first trigger absorbs
-    # every pending upstream batch (the catch-up regime under test).
+    # QD reads one pending local batch per trigger; QS has no
+    # maxFilesPerTrigger bound, so its first trigger absorbs every
+    # corpus batch published so far (the catch-up regime under test).
     t1 = time.time()
     tail = cur.attach_downstream(
         ckpt,
@@ -150,7 +151,7 @@ def main() -> None:
         )
 
     per_q, last_end = {}, t1
-    for name, q in zip(("local", "dedup", "shards"), tail):
+    for name, q in zip(("dedup", "shards"), tail):
         rows = [
             (_ts(p), p["durationMs"].get("triggerExecution", 0) / 1000.0,
              p["numInputRows"])

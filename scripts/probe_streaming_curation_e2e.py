@@ -1,9 +1,8 @@
 """Composed streaming-curation probe (VERDICT r13 #5): WARC segments
 delivered INCREMENTALLY (live-crawl shape) through the full query
-chain — gates (with Q1 fused in) -> state-store dedup (QD) -> streaming
-shards —
-with the batch path (one ``curate_crawl`` over the closed corpus) run
-on the same bytes as the ground truth.
+chain — gates + batch-local keepers (QA) -> state-store dedup (QD) ->
+streaming shards (QS) — with the batch path (one ``curate_crawl`` over
+the closed corpus) run on the same bytes as the ground truth.
 
 Corpus: N_SEGMENTS x PAGES_PER_SEG pages, unique URLs, with 10% exact
 re-crawls (same body as a REAL earlier original, different URL) and 5%
@@ -235,16 +234,14 @@ def main() -> None:
     )
     par32_pre = _par32()
     t0 = time.time()
-    # fuse_local (r15): Q1's batch-local keepers run inside the gate
-    # trigger — 3 chained queries instead of 4, one fewer file-handoff
-    # round trip per batch; semantics pinned equal by the e2e test.
+    # three chained queries: the gate stage runs the batch-local
+    # keepers inside its own trigger
     queries = cur.attach(
         docs,
         os.path.join(work, "ckpt"),
         trigger={"processingTime": "1 second"},
         output_files_per_batch=1,
         max_files_per_trigger=1,
-        fuse_local=True,
     )
     # incremental delivery: one segment at a time, like a live crawl
     for seg in range(N_SEGMENTS):

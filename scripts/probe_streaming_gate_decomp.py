@@ -15,7 +15,7 @@ against the r15 one:
                    blowup), and the audit count is a SECOND full parse
   r15_gate_s       the r15 shape: split parallel parse (chunk_bytes) +
                    eager localCheckpoint of the parsed batch +
-                   checkpoint="gates" pins + gates_only=True (the r14
+                   gates_only=True pins (the r14
                    shape CONSTRUCTED the dedup stages per batch, which
                    executes connected-components localCheckpoints and
                    builds the LSH expression forest — ~6.5 s of pure
@@ -108,10 +108,9 @@ def main() -> None:
         with warnings.catch_warnings():
             warnings.simplefilter("ignore")
             stages = curate_crawl(
-                pinned, bench=None, min_tokens=5, checkpoint="gates",
-                gates_only=True,
+                pinned, bench=None, min_tokens=5, gates_only=True,
             )
-        # eager "gates" pins: this call COMPUTES extraction + url dedup
+        # eager gates_only pins: this call COMPUTES extraction + url dedup
         # + gates — chain_s is plan build + gate compute together
         sub.setdefault("chain_s", []).append(round(time.time() - t, 3))
         t = time.time()

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from tests.test_pipeline_paths import _warc_record
@@ -24,7 +26,7 @@ def _page(words, extra="") -> bytes:
     return f"<html><body><p>{body}</p></body></html>".encode()
 
 
-def _wave(spark, cur, warc_dir, ckpt, fuse_local=False):
+def _wave(spark, cur, warc_dir, ckpt):
     from weather_monitoring_spark.sources.warc import (
         read_warc_stream,
         warc_responses_to_documents,
@@ -39,10 +41,10 @@ def _wave(spark, cur, warc_dir, ckpt, fuse_local=False):
         trigger={"availableNow": True},
         output_files_per_batch=1,
         max_files_per_trigger=1,
-        fuse_local=fuse_local,
     )
     for q in queries:
         q.awaitTermination()
+    return queries
 
 
 def test_streaming_curation_matches_batch_path(spark, tmp_path):
@@ -86,7 +88,7 @@ def test_streaming_curation_matches_batch_path(spark, tmp_path):
     )
     ckpt = str(tmp_path / "ckpt")
     # incremental arrival, one segment per wave (ordered first-arrival
-    # is the dedup determinism precondition), then flush the 5-stage
+    # is the dedup determinism precondition), then flush the 3-query
     # chain: each availableNow wave advances every stage by its pending
     # input.
     for i, recs in enumerate(segments):
@@ -136,22 +138,23 @@ def test_streaming_curation_matches_batch_path(spark, tmp_path):
         assert os.path.exists(os.path.join(cur.shard_dir, b, "_manifest"))
 
     # ---- gate-stage audit sidecars: offered = the 8 2xx responses
-    # (404 excluded at projection), gated = 7 (short page dropped);
+    # (404 excluded at projection), gated = 6: the short page fails the
+    # gates, and the exact duplicate of A inside segment 0 is dropped by
+    # the batch-local keepers the gate stage runs before it publishes;
     # every batch published implies its sidecar exists
     audit = cur.audit_report()
     assert audit, "audit sidecars missing"
     assert sum(r["offered"] for r in audit) == 8
-    assert sum(r["gated"] for r in audit) == 7
+    assert sum(r["gated"] for r in audit) == 6
     assert all(r["gated"] <= r["offered"] for r in audit)
 
 
-def test_fused_gate_stage_matches_unfused(spark, tmp_path):
-    """``fuse_local=True`` (the gate stage runs Q1's batch-local keepers
-    inside its own trigger and publishes straight into the dedup chain)
-    is a TOPOLOGY knob, not a semantics knob: the same incremental
-    corpus through the fused 4-query chain and the unfused 5-query
-    chain yields identical survivor content sets, identical shard row
-    sets, and reconciling audit sidecars."""
+def test_gate_stage_runs_the_local_keepers(spark, tmp_path):
+    """One curation topology: the gate stage runs the dedup chain's
+    batch-local keepers inside its own trigger and publishes straight
+    into ``dedup/local/`` — ``attach`` starts three queries (QA, QD,
+    QS), no ``gated/`` handoff is ever written, and the audit's
+    ``gated`` counts the post-keeper rows."""
     base = [f"alpha{i} fused word" for i in range(40)]
     near = list(base)
     del near[9]  # strictly shorter near-dup: keeper laws agree
@@ -167,54 +170,33 @@ def test_fused_gate_stage_matches_unfused(spark, tmp_path):
             _warc_record("http://c.example/1", _page(fresh)),
         ],
     ]
+    warc_dir = str(tmp_path / "crawl")
+    os.makedirs(warc_dir)
+    out = str(tmp_path / "out")
+    cur = StreamingCuration(spark, out, min_tokens=5, shard_budget=200)
+    ckpt = str(tmp_path / "ckpt")
+    for i, recs in enumerate(segments):
+        with open(os.path.join(warc_dir, f"seg{i}.warc"), "wb") as f:
+            f.write(b"".join(recs))
+        assert len(_wave(spark, cur, warc_dir, ckpt)) == 3
+    for _ in range(4):
+        _wave(spark, cur, warc_dir, ckpt)
+    assert not os.path.exists(os.path.join(out, "gated"))
 
-    results = {}
-    for mode, fuse in (("unfused", False), ("fused", True)):
-        warc_dir = str(tmp_path / mode / "crawl")
-        os.makedirs(warc_dir)
-        cur = StreamingCuration(
-            spark, str(tmp_path / mode / "out"), min_tokens=5,
-            shard_budget=200,
-        )
-        ckpt = str(tmp_path / mode / "ckpt")
-        for i, recs in enumerate(segments):
-            with open(os.path.join(warc_dir, f"seg{i}.warc"), "wb") as f:
-                f.write(b"".join(recs))
-            _wave(spark, cur, warc_dir, ckpt, fuse_local=fuse)
-        for _ in range(4):
-            _wave(spark, cur, warc_dir, ckpt, fuse_local=fuse)
-        results[mode] = {
-            "texts": {
-                r.h
-                for r in cur.corpus()
-                .select(F.md5("text").alias("h"))
-                .collect()
-            },
-            "shard_texts": {
-                r.h
-                for r in cur.shards()
-                .select(F.md5("text").alias("h"))
-                .collect()
-            },
-            "audit": cur.audit_report(),
-        }
-        if fuse:
-            # fused mode writes no gated artifact at all
-            assert not os.listdir(cur.gated_dir)
-
-    assert results["fused"]["texts"] == results["unfused"]["texts"]
-    assert len(results["fused"]["texts"]) == 2  # base + fresh survive
-    assert (
-        results["fused"]["shard_texts"] == results["unfused"]["shard_texts"]
-    )
-    # audit reconciles in both: offered = 5 2xx pages; fused `gated`
-    # counts post-local-keeper rows so it is <= the unfused gate count
-    for mode in ("unfused", "fused"):
-        audit = results[mode]["audit"]
-        assert audit and sum(r["offered"] for r in audit) == 5
-        assert all(r["gated"] <= r["offered"] for r in audit)
-    assert sum(r["gated"] for r in results["fused"]["audit"]) == 3
-    assert sum(r["gated"] for r in results["unfused"]["audit"]) == 4
+    texts = {
+        r.h for r in cur.corpus().select(F.md5("text").alias("h")).collect()
+    }
+    shard_texts = {
+        r.h for r in cur.shards().select(F.md5("text").alias("h")).collect()
+    }
+    assert len(texts) == 2  # base + fresh survive
+    assert shard_texts == texts
+    # offered = 5 2xx pages; gated = 3: the short page fails the gates
+    # and the in-batch exact duplicate of base never reaches the publish
+    audit = cur.audit_report()
+    assert audit and sum(r["offered"] for r in audit) == 5
+    assert all(r["gated"] <= r["offered"] for r in audit)
+    assert sum(r["gated"] for r in audit) == 3
 
 
 def test_shard_stage_absorbs_corpus_republish(spark, tmp_path):
@@ -425,18 +407,18 @@ def test_streaming_decontamination_matches_batch_clean_stage(
     assert any("decontamination" in str(w.message) for w in caught)
 
 
-import pytest
-
-
-@pytest.mark.parametrize("fuse", [False, True])
-def test_composed_pipeline_threads_the_dedup_horizon(spark, tmp_path, fuse):
+@pytest.mark.parametrize("global_url", [False, True])
+def test_composed_pipeline_threads_the_dedup_horizon(
+    spark, tmp_path, global_url
+):
     """dedup_horizon on StreamingCuration: the event time rides from
-    the source through the gate stage into the TTL'd dedup state — a
-    re-crawl of identical content WITHIN the horizon is dropped, one
-    past it is re-admitted, and the re-admitted copy is packed again.
-    Parametrized over ``fuse_local`` (r15): the fused gate stage must
-    thread the event time into local_batch's band derivation and out to
-    Q2 identically."""
+    the source through the gate stage (and its batch-local keepers'
+    band derivation) into the TTL'd dedup state — a re-crawl of
+    identical content WITHIN the horizon is dropped, one past it is
+    re-admitted, and the re-admitted copy is packed again.
+    Parametrized over the URL dedup scope: with ``global_url`` the
+    event time must also ride through QU's ``url_unique`` handoff
+    (every URL here is distinct, so QU drops nothing)."""
     import json
 
     def html(tag):
@@ -465,6 +447,7 @@ def test_composed_pipeline_threads_the_dedup_horizon(spark, tmp_path, fuse):
         spark,
         str(tmp_path / "out"),
         min_tokens=5,
+        url_dedup_scope="global" if global_url else "batch",
         dedup_horizon="1 hour",
     )
     ckpt = str(tmp_path / "ckpt")
@@ -483,10 +466,10 @@ def test_composed_pipeline_threads_the_dedup_horizon(spark, tmp_path, fuse):
             trigger={"availableNow": True},
             output_files_per_batch=1,
             max_files_per_trigger=1,
-            fuse_local=fuse,
         )
         for q in queries:
             q.awaitTermination()
+        assert len(queries) == (4 if global_url else 3)
 
     for i, rows in enumerate(batches):
         with open(os.path.join(src, f"b{i}.json"), "w") as f:

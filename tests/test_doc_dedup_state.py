@@ -207,39 +207,25 @@ def test_state_engine_bounded_horizon_expires_and_readmits(spark, tmp_path):
 
 
 def test_arrival_ordered_keepers_on_merged_batches(spark, tmp_path):
-    """Lagged-start catch-up law (found by the backpressure probe): when
-    one Q1 trigger merges many upstream batches, the keeper must order
-    by (upstream arrival, doc_id), not bare min doc_id — doc_ids are
-    content-derived, not arrival-ordered, so bare min-id picks a
-    DIFFERENT near-dup survivor than the lockstep run would. Crafted
-    merged batch: original A (doc_id 10, arrived batch 0) and its
-    near-dup B (doc_id 5, arrived batch 1, smaller id). Lockstep keeps
-    A (first arrival); arrival-ordered catch-up must too; bare min-id
-    keeps B — the divergence the probe measured on 2,380/100k pages."""
+    """Catch-up law for batches that merge several arrivals. Inside one
+    Q1 batch the keeper is the bare min doc_id — doc_ids are
+    content-derived, not arrival-ordered, so a merged batch holding an
+    original A (doc_id 10) and its near-dup B (doc_id 5) keeps B. The
+    arrival order that holds across a lagged start is QD's: it reads
+    one Q1 batch per trigger, so a backlog of Q1 batches keeps the
+    lockstep survivors."""
     base = _varied("alpha")
     near = " ".join(base.split()[:-1])  # strictly shorter near-dup
 
-    rows = [(10, base, 0), (5, near, 1)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, arr long")
-
-    def survivors(arrival_col):
-        out = str(tmp_path / f"dd_{arrival_col}")
-        dd = StateStoreDocDedup(spark, out)
-        dd.local_batch(df, 0, output_files_per_batch=1,
-                       arrival_col=arrival_col)
-        got = spark.read.parquet(
-            os.path.join(dd.local_dir, "batch_id=0")
-        )
-        assert "arr" not in got.columns  # ordering key is not shipped
-        assert "bands" in got.columns
-        return sorted(r.doc_id for r in got.select("doc_id").collect())
-
-    # arrival-ordered: the original (arrived first) wins despite the
-    # larger doc_id
-    assert survivors("arr") == [10]
-    # bare min-id (the pre-fix law, still the contract for single-batch
-    # triggers where arrival is constant): the near-dup's smaller id wins
-    assert survivors(None) == [5]
+    df = spark.createDataFrame(
+        [(10, base), (5, near)], "doc_id long, text string"
+    )
+    dd = StateStoreDocDedup(spark, str(tmp_path / "dd_merged"))
+    dd.local_batch(df, 0, output_files_per_batch=1)
+    got = spark.read.parquet(os.path.join(dd.local_dir, "batch_id=0"))
+    assert "bands" in got.columns
+    # bare min-id within one batch: the near-dup's smaller id wins
+    assert sorted(r.doc_id for r in got.select("doc_id").collect()) == [5]
 
     # ...and the dedup query never merges two Q1 batches into one
     # trigger: publish originals, then their near-dups, as two Q1

@@ -68,7 +68,7 @@ def curate_crawl(
     score_threshold: float = 0.0,
     shard_dir: str | None = None,
     shard_budget: int = 100_000,
-    checkpoint: bool | str = True,
+    checkpoint: bool = True,
     token_counter=None,
     gopher_kwargs: dict | None = None,
     repetition_kwargs: dict | None = None,
@@ -100,18 +100,7 @@ def curate_crawl(
     stage boundary (eager localCheckpoint) so one stage's shuffles
     aren't re-run by the next stage's actions — the right default for
     the multi-action audit pattern; pass False to keep the whole chain
-    lazy for single-action use. Pass ``"gates"`` to pin ONLY the gate
-    stages (extracted, url_unique, curated) and leave everything after
-    ``curated`` lazy: the per-micro-batch caller (the streaming gate
-    stage) evaluates only ``curated`` but delegates content dedup
-    downstream, so the full-lazy plan both re-inlines the html->text
-    extraction chain into every gate signal column (the 25x projection-
-    collapse blowup measured below) and re-parses the source per plan
-    branch, while ``True`` would eagerly compute the dedup stages it
-    never uses. (r16: "gates" pins extracted and curated only —
-    url_unique has exactly one downstream reference, so its pin was a
-    pure extra materialization job per micro-batch; checkpoint=True
-    still pins it for the multi-count audit pattern.)
+    lazy for single-action use.
     ``gates_only=True`` stops the chain at ``curated``
     (post-gate fields come back None): a caller that delegates content
     dedup elsewhere — the streaming gate stage hands it to the
@@ -122,6 +111,7 @@ def curate_crawl(
     py4j/parse round trips (profiled: ~6.5 s of the streaming gate
     stage's 13.5 s/batch was building+running dedup machinery whose
     output was discarded — r15, probe_streaming_gate_decomp.json).
+    With ``checkpoint=True`` it pins ``extracted`` and ``curated`` only.
     ``token_counter`` (see
     operators/training_prep.TokenCounter) selects the shard-budget
     denomination — pass ``operators.tokenize.bpe_token_counter()`` for
@@ -183,20 +173,11 @@ def curate_crawl(
             f"already do)"
         )
 
-    if checkpoint not in (True, False, "gates"):
-        raise ValueError(
-            f"checkpoint must be True, False or 'gates', got {checkpoint!r}"
-        )
+    if not isinstance(checkpoint, bool):
+        raise TypeError(f"checkpoint must be a bool, got {checkpoint!r}")
 
     def pin(df: DataFrame) -> DataFrame:
-        # gate-stage pins: on for True AND "gates" (truthy)
         return df.localCheckpoint(eager=True) if checkpoint else df
-
-    def pin_post(df: DataFrame) -> DataFrame:
-        # post-gate pins (exact_unique onward): eager pinning here would
-        # COMPUTE the dedup stages, which the "gates" mode exists to
-        # avoid — on only for checkpoint=True.
-        return df.localCheckpoint(eager=True) if checkpoint is True else df
 
     if pre_extracted:
         extracted = crawl.select("doc_id", "url", "text")
@@ -235,11 +216,13 @@ def curate_crawl(
     # curated chain), and the projection-collapse blowup this stage's
     # pin guarded against is already stopped by the EXTRACTED pin (the
     # gate signals reference the pin's text attribute, not an inlined
-    # extraction expression). In "gates" mode — the per-trigger
+    # extraction expression). With gates_only — the per-trigger
     # streaming caller — the pin was therefore a pure extra
     # materialization job per micro-batch (r16 trigger decomposition);
-    # audit counting in the batch path (checkpoint=True) still pins.
-    url_unique = pin_post(extracted.join(url_keep, "doc_id", "left_semi"))
+    # audit counting over the full chain still pins.
+    url_unique = extracted.join(url_keep, "doc_id", "left_semi")
+    if not gates_only:
+        url_unique = pin(url_unique)
 
     gated = url_unique
     if repetition_kwargs is not None:
@@ -334,7 +317,7 @@ def curate_crawl(
     exact_keep = exact_dedup(curated).select(
         F.col("keeper_doc_id").alias("doc_id")
     )
-    exact_unique = pin_post(
+    exact_unique = pin(
         curated.join(exact_keep, "doc_id", "left_semi")
     )
 
@@ -342,7 +325,7 @@ def curate_crawl(
     surv_ids = quality_survivors(
         exact_unique, pairs, quality=F.col("n_tokens").cast("double")
     ).filter(F.col("survivor"))
-    survivors = pin_post(
+    survivors = pin(
         exact_unique.join(surv_ids.select("doc_id"), "doc_id", "left_semi")
     )
 
@@ -360,7 +343,7 @@ def curate_crawl(
         clean = survivors
     else:
         flags = contamination_flags(survivors, bench)
-        clean = pin_post(
+        clean = pin(
             survivors.join(
                 flags.filter(~F.col("contaminated")).select("doc_id"),
                 "doc_id",
@@ -379,7 +362,7 @@ def curate_crawl(
         # restricted to the final corpus: the label (min id of the
         # near-dup component) is identical for every member, so the
         # surviving copy inherits the split its whole cluster shares.
-        split = pin_post(
+        split = pin(
             leakage_safe_split(exact_unique, pairs, **kwargs).join(
                 clean.select("doc_id"), "doc_id", "left_semi"
             )

@@ -2,30 +2,31 @@
 an UNBOUNDED crawl feed (VERDICT r13 #5): WARC/WET segments landing in
 a directory flow through per-micro-batch quality gates, cross-batch
 exact+fuzzy dedup on the scan-free state-store engine, and the
-token-budgeted streaming shard packer — four chained checkpointed
-queries (three with ``fuse_local=True``: Q1 is stateless per batch and
-can run inside the gate trigger), each handoff either a transactional
-streaming file sink or the staged atomic-rename publish
-(doc_dedup_state._atomic_promote), so the composition stays end-to-end
-exactly-once in unbounded mode (bounded-horizon qualification:
-doc_dedup_state module header).
+token-budgeted streaming shard packer — three chained checkpointed
+queries (four with the optional global URL dedup QU), each handoff
+either a transactional streaming file sink or the staged atomic-rename
+publish (doc_dedup_state._atomic_promote), so the composition stays
+end-to-end exactly-once in unbounded mode (bounded-horizon
+qualification: doc_dedup_state module header).
 
 Topology:
 
-  QA (gates, stateless): doc stream (doc_id, url, html) — e.g.
-     ``warc_responses_to_documents(read_warc_stream(...))`` — runs the
-     BATCH curation gate chain (``pipelines.curate_crawl``) inside
-     foreachBatch on each micro-batch and atomically publishes the
-     gated docs to ``<out>/gated/batch_id=N``. Only the ``curated``
-     stage of the batch pipeline is evaluated: URL dedup + the rule
-     gates are per-batch properties; ALL content dedup is delegated
-     downstream so it can be cross-batch.
+  QA (gates + batch-local keepers, stateless): doc stream (doc_id,
+     url, html) — e.g. ``warc_responses_to_documents(read_warc_stream(
+     ...))`` — runs the BATCH curation gate chain
+     (``pipelines.curate_crawl``) inside foreachBatch on each
+     micro-batch, then the dedup chain's batch-local keepers
+     (``StateStoreDocDedup.local_batch``, stateless per batch) in the
+     same trigger, and atomically publishes the result to
+     ``<out>/dedup/local/batch_id=N``. Only the ``curated`` stage of the
+     batch pipeline is evaluated: URL dedup + the rule gates are
+     per-batch properties; cross-batch content dedup is QD's.
 
-  Q1/QD (state-store dedup): ``doc_dedup_state.StateStoreDocDedup``
-     attached to QA's sink — batch-local keepers, then one query
-     holding the exact-vs-history fp state and the fuzzy-vs-history
-     band-claim state; survivors land in
-     ``<out>/dedup/corpus/batch_id=N`` (atomically published).
+  QD (state-store dedup): ``StateStoreDocDedup.attach_dedup`` reading
+     QA's local batches one file per trigger — one query holding the
+     exact-vs-history fp state and the fuzzy-vs-history band-claim
+     state; survivors land in ``<out>/dedup/corpus/batch_id=N``
+     (atomically published).
 
   QS (shards): QD's corpus read as a file stream (QD's reader recipe:
      declared batch_id partition + ignoreMissingFiles) through a
@@ -96,13 +97,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from weather_monitoring_spark.streaming.doc_dedup_state import (
-    StateStoreDocDedup,
-    _atomic_promote,
-)
+from weather_monitoring_spark.streaming.doc_dedup_state import StateStoreDocDedup
 from weather_monitoring_spark.streaming.shard_stream import attach_shard_stream
-
-_GATED_SCHEMA = "doc_id long, text string"
 
 
 def _parquet_footer_rows(local_dir: str) -> int:
@@ -148,7 +144,7 @@ class StreamingCuration:
         (TTL'd) mode through the whole chain: the input stream must
         carry an event-time timestamp column named ``event_time_col``
         (e.g. the crawl capture time); the gate stage re-attaches it to
-        the gated docs and content seen longer ago than the horizon is
+        the curated docs and content seen longer ago than the horizon is
         re-admitted (``StateStoreDocDedup`` docstring for the trade).
 
         ``bench`` (r15, closing the one batch-vs-streaming semantic
@@ -170,7 +166,6 @@ class StreamingCuration:
             )
         self.spark = spark
         self.url_unique_dir = os.path.join(out_dir, "url_unique")
-        self.gated_dir = os.path.join(out_dir, "gated")
         self.dedup_dir = os.path.join(out_dir, "dedup")
         self.shard_dir = os.path.join(out_dir, "shards")
         self.min_tokens = min_tokens
@@ -196,12 +191,11 @@ class StreamingCuration:
             # idempotent on restart: same closed bench -> same table
             benchmark_shingles(bench).write.mode("overwrite").parquet(sh_dir)
             self._bench_shingles = spark.read.parquet(sh_dir)
-        os.makedirs(self.gated_dir, exist_ok=True)
         # QA's reader resolves url_unique_dir the moment attach() starts
         # it in global scope — QU's sink creates the directory
         # asynchronously, so on a cold start the source would race a
         # 'Path does not exist' (r14 advisor finding). Create it up
-        # front like gated_dir.
+        # front.
         os.makedirs(self.url_unique_dir, exist_ok=True)
         if self.audit_dir:
             os.makedirs(self.audit_dir, exist_ok=True)
@@ -211,9 +205,9 @@ class StreamingCuration:
         data, driver-side — deliberately, like the batch path's
         curation_report: an audit you cannot read without a cluster is
         not an audit). ``gated`` counts the rows the gate stage
-        PUBLISHED for that batch: the gated artifact normally, the
-        batch-local-keeper output when ``fuse_local`` folded Q1 into
-        the gate trigger."""
+        PUBLISHED for that batch: its batch-local-keeper output, so an
+        exact or near duplicate inside one batch is already gone from
+        the count."""
         if not self.audit_dir:
             return []
         out = []
@@ -281,35 +275,26 @@ class StreamingCuration:
         checkpoint_dir: str,
         trigger: dict | None = None,
         output_files_per_batch: int | None = None,
-        fuse_local: bool = False,
     ) -> StreamingQuery:
         """``doc_stream`` carries (doc_id, url, html) — the
         ``warc_responses_to_documents`` contract.
 
-        ``fuse_local=True`` runs the dedup chain's Q1 (batch-local
-        keepers — stateless per batch, see
-        ``StateStoreDocDedup.local_batch``) INSIDE this stage's
-        foreachBatch and publishes straight to the dedup chain's
-        ``local`` directory; the intermediate ``gated`` artifact and
-        Q1's whole trigger + file-handoff round trip disappear.
-        Output rows are identical batch for batch (Q1 is a pure
-        function of the batch), so this is a topology knob, not a
-        semantics knob — the e2e test pins fused == unfused survivor
-        sets.
+        Each trigger runs the gate chain, then the dedup chain's
+        batch-local keepers (``StateStoreDocDedup.local_batch`` — a
+        pure function of the batch) on the gated rows, and publishes
+        straight into the dedup chain's ``local`` directory, where QD
+        reads it.
 
-        Lagged-start caveat: in UNFUSED mode a downstream catch-up
-        merge is arrival-ordered (the gate batch_id rides the handoff;
-        ``StateStoreDocDedup.local_batch`` ``arrival_col``). A FUSED
-        gate stage that itself starts lagged with an uncapped source
-        merges raw files into one trigger with no arrival key, so
-        near-dup keeper arbitration inside that merged batch falls back
-        to min-doc_id — bound the gate source
-        (``maxFilesPerTrigger``) or use the unfused topology when
-        lockstep-equal catch-up survivors matter."""
+        Lagged-start note: the keepers arbitrate near-dups inside one
+        trigger by min doc_id, and a gate stage that starts lagged with
+        an uncapped source merges many raw files into one trigger —
+        bound the gate source with ``maxFilesPerTrigger`` when
+        lockstep-equal catch-up survivors matter. QD and QS may start
+        late (:meth:`attach_downstream`): QD reads one local batch per
+        trigger."""
         from weather_monitoring_spark.pipelines import curate_crawl
 
         trig = trigger or {"processingTime": "10 seconds"}
-        gated_dir = self.gated_dir
         min_tokens = self.min_tokens
         ck = dict(self.curate_kwargs)
         n_files = output_files_per_batch
@@ -328,10 +313,9 @@ class StreamingCuration:
             # re-ran the WARC parse; worse, projection collapse
             # re-inlined the html->text extraction chain into every
             # gate signal column. One eager localCheckpoint of the
-            # trigger-sized input + the "gates" pin mode (extracted /
-            # url_unique / curated only — the dedup stages delegated to
-            # Q1/QD stay unevaluated) makes every downstream reference
-            # read the pin.
+            # trigger-sized input + the gates_only pins (extracted and
+            # curated only — the batch path's dedup stages are never
+            # built) makes every downstream reference read the pin.
             pinned = batch_df.localCheckpoint(eager=True)
             # bench=None warns by design (decontamination is a
             # closed-corpus pass; the streaming twin is the bench=
@@ -345,7 +329,6 @@ class StreamingCuration:
                     pinned,
                     bench=None,
                     min_tokens=min_tokens,
-                    checkpoint="gates",
                     gates_only=True,
                     **ck,
                 )
@@ -357,37 +340,24 @@ class StreamingCuration:
                 out = out.join(
                     pinned.select("doc_id", ts_col), "doc_id", "left"
                 )
-            if fuse_local:
-                # Q1 fused into this trigger (docstring): batch-local
-                # keepers + band derivation publish directly into the
-                # dedup chain's local directory; no gated artifact.
-                # When the event-time rejoin added a JOIN above the
-                # curated pin, pin the gated rows FIRST: local_batch's
-                # keeper plan references its input from ~5 branches (fp
-                # argmax, semi-join, band explode, keeper join,
-                # anti-join), and each branch would re-run that join
-                # (measured 19.5 s/2k-page batch vs 2.7 s for the gate
-                # chain alone, r15). WITHOUT the rejoin, `out` is a
-                # trivial projection of the ALREADY-PINNED curated
-                # stage — re-pinning it only re-materialized the batch
-                # once more (one extra job + text-bytes store per
-                # trigger, r16 trigger decomposition); the branches
-                # re-read the curated pin, which is what it exists for.
-                if ts_col:
-                    out = out.localCheckpoint(eager=True)
-                self.dedup.local_batch(out, batch_id, n_files)
-                published = os.path.join(
-                    self.dedup.local_dir, f"batch_id={batch_id}"
-                )
-            else:
-                if n_files:
-                    out = out.coalesce(n_files)
-                staging = os.path.join(
-                    gated_dir, "_staging", f"batch_id={batch_id}"
-                )
-                out.write.mode("overwrite").parquet(staging)
-                published = os.path.join(gated_dir, f"batch_id={batch_id}")
-                _atomic_promote(batch_df.sparkSession, staging, published)
+                # The rejoin puts a JOIN above the curated pin, so pin
+                # the gated rows: local_batch's keeper plan references
+                # its input from ~5 branches (fp argmax, semi-join, band
+                # explode, keeper join, anti-join), and each branch
+                # would re-run that join (measured 19.5 s/2k-page batch
+                # vs 2.7 s for the gate chain alone, r15). WITHOUT the
+                # rejoin, `out` is a trivial projection of the
+                # ALREADY-PINNED curated stage — re-pinning it only
+                # re-materialized the batch once more (one extra job +
+                # text-bytes store per trigger, r16 trigger
+                # decomposition).
+                out = out.localCheckpoint(eager=True)
+            # batch-local keepers + band derivation, published into the
+            # dedup chain's local directory (docstring)
+            self.dedup.local_batch(out, batch_id, n_files)
+            published = os.path.join(
+                self.dedup.local_dir, f"batch_id={batch_id}"
+            )
             if audit_dir:
                 # Per-batch audit sidecar — the streaming twin of
                 # pipelines.curation_report: an unbounded pipeline that
@@ -399,9 +369,9 @@ class StreamingCuration:
                 # its presence implies the batch is fully published
                 # (monitors can tail it), and idempotently overwritten
                 # on replay.
-                # in fused mode the published artifact is the local-
-                # keeper batch, so `gated` counts post-local-dedup rows
-                # (documented in audit_report). Footer-only count: on a
+                # The published artifact is the local-keeper batch, so
+                # `gated` counts post-local-dedup rows (documented in
+                # audit_report). Footer-only count: on a
                 # local filesystem the parquet metadata is read driver-
                 # side (~ms) instead of scheduling a Spark job per batch
                 # (~0.3-0.4 s of the gate trigger, measured in the
@@ -505,58 +475,24 @@ class StreamingCuration:
         trigger: dict | None = None,
         output_files_per_batch: int | None = None,
         max_files_per_trigger: int | None = None,
-        include_local: bool = True,
-    ) -> tuple[StreamingQuery, ...]:
-        """Start everything DOWNSTREAM of the gate stage — (Q1, QD, QS),
-        or (QD, QS) with ``include_local=False`` when the gate stage
-        fused Q1 into itself. Split out of :meth:`attach` so a catch-up
-        / backpressure scenario can start these LATER than the gate
-        stage: on a lagged start Q1 merges many gate batches into one
-        arrival-ordered micro-batch, and QD reads Q1's output one file
-        per trigger (``StateStoreDocDedup.attach_dedup`` determinism
-        note), so the survivors equal the lockstep run's."""
-        ts_part = f", {self.ts_col} timestamp" if self.ts_col else ""
-        ts_sel = (self.ts_col,) if self.ts_col else ()
-        dedup_ckpt = os.path.join(checkpoint_root, "dedup")
-        qs_head: tuple[StreamingQuery, ...] = ()
-        if include_local:
-            gated = (
-                self.spark.readStream.schema(
-                    _GATED_SCHEMA + ts_part + ", batch_id long"
-                )
-                .option("basePath", self.gated_dir)
-                .option("ignoreMissingFiles", "true")
-            )
-            if max_files_per_trigger:
-                gated = gated.option(
-                    "maxFilesPerTrigger", max_files_per_trigger
-                )
-            # batch_id rides along as the ARRIVAL key: on a lagged
-            # start Q1 merges many gate batches into one trigger, and
-            # the keeper law must order by upstream arrival first so
-            # catch-up picks the same near-dup survivors as lockstep
-            # (local_batch arrival_col docstring; found by the
-            # backpressure probe).
-            gated_stream = gated.parquet(
-                os.path.join(self.gated_dir, "batch_id=*")
-            ).select("doc_id", "text", "batch_id", *ts_sel)
-            q1 = self.dedup.attach_local(
-                gated_stream,
-                os.path.join(dedup_ckpt, "local"),
-                trigger,
-                output_files_per_batch,
-                arrival_col="batch_id",
-            )
-            qs_head = (q1,)
+    ) -> tuple[StreamingQuery, StreamingQuery]:
+        """Start everything DOWNSTREAM of the gate stage — (QD, QS).
+        Split out of :meth:`attach` so a catch-up / backpressure
+        scenario can start these LATER than the gate stage: QD reads
+        the gate stage's local batches one file per trigger
+        (``StateStoreDocDedup.attach_dedup`` determinism note), so the
+        survivors equal the lockstep run's."""
         qd = self.dedup.attach_dedup(
-            os.path.join(dedup_ckpt, "dedup"), trigger, output_files_per_batch
+            os.path.join(checkpoint_root, "dedup", "dedup"),
+            trigger,
+            output_files_per_batch,
         )
         qs = self.attach_shards(
             os.path.join(checkpoint_root, "shards"),
             trigger,
             max_files_per_trigger=max_files_per_trigger,
         )
-        return (*qs_head, qd, qs)
+        return qd, qs
 
     def attach(
         self,
@@ -565,14 +501,13 @@ class StreamingCuration:
         trigger: dict | None = None,
         output_files_per_batch: int | None = None,
         max_files_per_trigger: int | None = None,
-        fuse_local: bool = False,
     ) -> tuple[StreamingQuery, ...]:
-        """Start the full query chain; returns (QA, Q1, QD, QS) —
-        prefixed with QU when ``url_dedup_scope="global"``, and without
-        Q1 when ``fuse_local=True`` (the gate stage runs the batch-local
-        keepers inside its own trigger; :meth:`attach_gates`). One-file-
-        per-batch + maxFilesPerTrigger=1 preserves batch granularity
-        across every handoff; QD always reads one Q1 file per trigger
+        """Start the full query chain; returns (QA, QD, QS) — prefixed
+        with QU when ``url_dedup_scope="global"``. The gate stage runs
+        the batch-local keepers inside its own trigger
+        (:meth:`attach_gates`). One-file-per-batch +
+        maxFilesPerTrigger=1 preserves batch granularity across every
+        handoff; QD always reads one local batch file per trigger
         (``StateStoreDocDedup.attach_dedup`` determinism note)."""
         if self._bench_shingles is None:
             # honest, not silenced (r14 verdict #2): without a bench
@@ -585,9 +520,9 @@ class StreamingCuration:
                 "decontamination gate.",
                 stacklevel=2,
             )
-        ts_part = f", {self.ts_col} timestamp" if self.ts_col else ""
         head: tuple[StreamingQuery, ...] = ()
         if self.url_dedup_scope == "global":
+            ts_part = f", {self.ts_col} timestamp" if self.ts_col else ""
             qu = self.attach_url_dedup(
                 doc_stream,
                 os.path.join(checkpoint_root, "url"),
@@ -608,14 +543,12 @@ class StreamingCuration:
             os.path.join(checkpoint_root, "gates"),
             trigger,
             output_files_per_batch,
-            fuse_local=fuse_local,
         )
         tail = self.attach_downstream(
             checkpoint_root,
             trigger,
             output_files_per_batch=output_files_per_batch,
             max_files_per_trigger=max_files_per_trigger,
-            include_local=not fuse_local,
         )
         return (*head, qa, *tail)
 

@@ -32,6 +32,9 @@ composition stays end-to-end exactly-once:
      expensive projection, runs ONCE here). After Q1 a batch never
      carries two docs sharing a fingerprint or a band bucket — the
      precondition that makes QD's native dedup semantics exact.
+     ``StreamingCuration`` runs this body inside its gate stage's
+     trigger (:meth:`StateStoreDocDedup.local_batch`) instead of as a
+     query of its own.
 
   QD (exact + fuzzy vs all history, :meth:`attach_dedup`): Q1's output,
      ONE FILE PER TRIGGER -> ``dropDuplicates`` on the fp digest (first
@@ -293,44 +296,25 @@ class StateStoreDocDedup:
         batch_df: DataFrame,
         batch_id: int,
         output_files_per_batch: int | None = None,
-        arrival_col: str | None = None,
     ) -> None:
         """The Q1 micro-batch body as a plain batch function: batch-local
         keepers + band-array derivation, atomically published to
         ``<out>/local/batch_id=N``. Called by :meth:`attach_local`'s
-        foreachBatch, and DIRECTLY from an upstream foreachBatch that
-        fuses Q1 into itself (``StreamingCuration`` ``fuse_local`` —
-        Q1 is stateless per batch, so running it inside the producer's
-        trigger is semantically identical and saves one whole query's
-        trigger + file-handoff round trip per batch). foreachBatch
-        callables run on the driver, so a bound method is safe here.
+        foreachBatch, and DIRECTLY from ``StreamingCuration``'s gate
+        stage, which runs it inside its own trigger (Q1 is stateless per
+        batch). foreachBatch callables run on the driver, so a bound
+        method is safe here.
 
-        ``arrival_col`` (r15, found by the backpressure probe): on a
-        LAGGED start, one Q1 trigger merges many upstream batches, and
-        the bare min-doc_id keeper then arbitrates near-dup pairs that
-        lockstep arrival kept apart — doc_ids are content-derived, not
-        arrival-ordered, so the merged run picked different near-dup
-        survivors than the lockstep run on ~half the pairs (2,380/100k
-        pages measured). Naming the upstream batch-id column here makes
-        the keeper law (arrival, doc_id)-lexicographic: identical to
-        min-doc_id within one upstream batch (arrival constant), and
-        first-arrival-consistent across merged batches — catch-up then
-        yields the same survivor content set as lockstep. The column is
-        consumed for ordering only, not written downstream."""
+        The keeper law is min doc_id within the batch. doc_ids are
+        content-derived, not arrival-ordered, so a batch that merges
+        several upstream arrivals (a producer that starts lagged with an
+        uncapped source) can keep a later near-dup over its earlier
+        original. Bound the producer's source with ``maxFilesPerTrigger``
+        when lockstep-equal catch-up survivors matter; QD may start late,
+        since it reads one local batch per trigger."""
         extra = self._extra
-        okey = (
-            (F.col(arrival_col), F.col("doc_id"))
-            if arrival_col
-            else (F.col("doc_id"),)
-        )
-        keep_extra = extra + ((arrival_col,) if arrival_col else ())
-        hashed = _with_fp(batch_df, keep_extra)
-        w_min = hashed.groupBy("fp").agg(
-            F.min(F.struct(*okey)).alias("_k")
-        )
-        w_min = w_min.select(
-            "fp", F.col("_k").getField("doc_id").alias("doc_id")
-        )
+        hashed = _with_fp(batch_df, extra)
+        w_min = hashed.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
         fresh = hashed.join(w_min, ["fp", "doc_id"], "left_semi")
         # Bands computed HERE, once, and shipped downstream as an
         # array column (``_with_band_array`` docstring): the keeper
@@ -343,29 +327,22 @@ class StateStoreDocDedup:
         # fp semi-join + the Arrow signature pass — measured ~6.6 s of
         # the unpinned form's ~7.6 s/2k-doc batch, almost all fixed
         # re-execution + stage overhead, vs ~one evaluation pinned. The
-        # pin is O(trigger batch), the same bound the unfused parquet
-        # handoff already materialized.
-        banded = _with_band_array(fresh, keep_extra).localCheckpoint(
-            eager=True
-        )
+        # pin is O(trigger batch).
+        banded = _with_band_array(fresh, extra).localCheckpoint(eager=True)
         ex = banded.select(
-            "doc_id",
-            *((arrival_col,) if arrival_col else ()),
-            F.posexplode("bands").alias("band_idx", "bh"),
+            "doc_id", F.posexplode("bands").alias("band_idx", "bh")
         ).filter(F.col("bh").isNotNull())
         keepers = ex.groupBy("band_idx", "bh").agg(
-            F.min(F.struct(*okey)).alias("_keeper")
+            F.min("doc_id").alias("_keeper")
         )
         drops = (
             ex.join(keepers, ["band_idx", "bh"])
-            .filter(F.struct(*okey) > F.col("_keeper"))
+            .filter(F.col("doc_id") > F.col("_keeper"))
             .select("doc_id")
             # no distinct: left_anti ignores right-side multiplicity,
             # and the dedup shuffle was a whole extra stage per trigger
         )
         out = banded.join(drops, "doc_id", "left_anti")
-        if arrival_col:
-            out = out.drop(arrival_col)
         if output_files_per_batch:
             out = out.coalesce(output_files_per_batch)
         # Stage, then atomically rename into the listened directory
@@ -387,13 +364,12 @@ class StateStoreDocDedup:
         checkpoint_dir: str,
         trigger: dict | None = None,
         output_files_per_batch: int | None = None,
-        arrival_col: str | None = None,
     ) -> StreamingQuery:
         trig = trigger or {"processingTime": "10 seconds"}
         n_files = output_files_per_batch
 
         def local_keepers(batch_df: DataFrame, batch_id: int) -> None:
-            self.local_batch(batch_df, batch_id, n_files, arrival_col)
+            self.local_batch(batch_df, batch_id, n_files)
 
         return (
             doc_stream.writeStream.foreachBatch(local_keepers)
